@@ -9,6 +9,11 @@ from stats import Windows, geomean, median, self_time
 
 MODULES = ["core", "operators", "llm", "sources", "streaming"]
 
+# Median time of the host-speed kernel (HostSpeed.scala) on an idle
+# 4-core 2.1 GHz Xeon virtual machine: the speed end-to-end times are
+# scaled to.
+KERNEL_REF_MS = 6.6
+
 
 def _ops(raw, pass_name):
     """Per operation samples of a pass: battery entry calls (build +
@@ -49,21 +54,34 @@ def run_seconds(raw, pass_name="timed"):
     return sum(_medians(raw, pass_name).values())
 
 
+def kernel_ms(raw, pass_name="timed"):
+    """Median time of the host-speed kernel run between a pass's
+    operations."""
+    return median([x["ns"] / 1e6 for x in raw["speed"] if x["pass"] == pass_name])
+
+
+def setup_seconds(raw):
+    """Session start + median cold `Graft.ctx` + the warm/check pass
+    (+ server start on serving), in wall seconds."""
+    return raw["session_s"] + median(raw["ctx_s"]) + raw["warm_s"] + raw.get("server_s", 0.0)
+
+
 def end_to_end(raw):
-    lat_ms = [t * 1000 for _, _, t in _ops(raw, "timed")]
-    setup = raw["session_s"] + median(raw["ctx_s"]) + raw["warm_s"] + raw.get("server_s", 0.0)
+    """End-to-end metrics. Times are scaled to the reference host speed:
+    wall time x KERNEL_REF_MS / the run's median kernel time, so a run on
+    a host that a neighbour slows reads as one on an idle host."""
+    scale = KERNEL_REF_MS / kernel_ms(raw)
     divisor = raw["input_bytes"] + raw.get("request_body_bytes", 0)
     return {
-        "setup_s": (setup, "s"),
-        "run_s": (run_seconds(raw), "s"),
-        "geomean_s": (geomean(list(_medians(raw, "timed").values())), "s"),
-        "p50_ms": (median(lat_ms), "ms"),
+        "setup_s": (setup_seconds(raw) * scale, "s"),
+        "run_s": (run_seconds(raw) * scale, "s"),
+        "geomean_s": (geomean(list(_medians(raw, "timed").values())) * scale, "s"),
         "space_amp": (raw["written_bytes"] / divisor, "ratio"),
     }
 
 
 def samples(raw):
-    """Timed operations behind `p50_ms`: battery calls or requests."""
+    """Timed operations of a run: battery calls or requests."""
     return len(_ops(raw, "timed"))
 
 
@@ -167,4 +185,17 @@ def per_layer(raw):
     m["jvm.peak_heap_mb"] = (jvm["peak_heap_mb"], "MB")
     m["leak.rdds"] = (raw["leak_rdds"], "count")
     m["trace.overhead_s"] = (run_seconds(raw, "trace1") - run_seconds(raw), "s")
+    m["host.steal_share"] = (steal_share(raw), "ratio")
+    m["host.kernel_ms"] = (kernel_ms(raw), "ms")
+    m["wall.setup_s"] = (setup_seconds(raw), "s")
+    m["wall.run_s"] = (run_seconds(raw), "s")
     return m, exact
+
+
+def steal_share(raw, pass_name="timed"):
+    """Share of the CPU time the machine wanted during a pass's calls
+    that the host gave to something else (steal over run + steal)."""
+    spans = [s for s in raw["spans"] if s["pass"] == pass_name]
+    run = sum(s["run_ticks"] for s in spans)
+    steal = sum(s["steal_ticks"] for s in spans)
+    return steal / (run + steal) if run + steal else 0.0

@@ -19,7 +19,7 @@ object Battery {
 
   /** Timed passes per run: whole passes of about `passSeconds` each on
     * a 4-core machine, so the work done does not depend on speed. */
-  val passSeconds = 7.0
+  val passSeconds = 5.0
   def passes(seconds: Double): Int = math.max(1, math.round(seconds / passSeconds).toInt)
 
   /** The module an entry's time is attributed to, by name prefix. */
@@ -76,12 +76,12 @@ object Battery {
       } finally {
         val _ = graft.util.Scratch.drain()
         run.leakedRdds += Leaks.settle(spark, name)
+        for (_ <- 1 to HostSpeed.samplesPerOp) run.speed += pass -> HostSpeed.sample()
       }
     }
 
-    // set-up: a check pass (fingerprints; lazy on-disk artifacts), then a
-    // second warm pass, so the JIT compiles the hot paths before timing
-    // rather than competing with the timed pass for the cores
+    // set-up: a check pass, which fingerprints every result and builds
+    // the lazy on-disk artifacts
     val prints = scala.collection.mutable.LinkedHashMap[String, Any]()
     val warm0 = Clock.nowNs
     clearMemos()
@@ -91,8 +91,6 @@ object Battery {
         run.golden.check(n, p).foreach(run.fail)
       }
     }
-    clearMemos()
-    order.foreach(call(_, "warm", fingerprint = false))
     val warmS = (Clock.nowNs - warm0) / 1e9
 
     jvm.begin()

@@ -54,12 +54,15 @@ object Main {
     var attempted = 0L
     var failed = 0L
     var leakedRdds = 0L
+    /** Host-speed kernel times in ns, with the pass they followed. */
+    val speed = scala.collection.mutable.ArrayBuffer[(String, Long)]()
     val extra = scala.collection.mutable.LinkedHashMap[String, Any]()
 
     /** Time `f` as a span; failures propagate after the span is kept. */
     def span[T](kind: String, name: String, cls: String, pass: String)(f: => T): T = {
+      val c0 = HostCpu.now
       val t0 = Clock.nowNs
-      try f finally spans += Span(kind, name, cls, pass, t0, Clock.nowNs)
+      try f finally { val t1 = Clock.nowNs; spans += Span(kind, name, cls, pass, t0, t1, c0, HostCpu.now) }
     }
 
     def fail(msg: String): Unit = { failed += 1; checks += msg; System.err.println(s"[bench] $msg") }
@@ -98,6 +101,7 @@ object Main {
       "session_s" -> sessionS,
       "attempted" -> run.attempted, "failed" -> run.failed,
       "checks" -> run.checks.toList, "leak_rdds" -> run.leakedRdds,
+      "speed" -> run.speed.map { case (p, ns) => Map("pass" -> p, "ns" -> ns) }.toList,
       "spans" -> run.spans.map(_.toJson).toList,
       "input_bytes" -> dirBytes(new File(dataDir), _.getName.endsWith(".parquet")),
       "jvm" -> jvm.report) ++ run.extra

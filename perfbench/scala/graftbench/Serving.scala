@@ -225,6 +225,7 @@ object Serving {
       } finally {
         val _ = graft.util.Scratch.drain()
         run.leakedRdds += Leaks.settle(spark, r.kind)
+        for (_ <- 1 to HostSpeed.samplesPerOp) run.speed += pass -> HostSpeed.sample()
       }
     }
 

@@ -16,14 +16,31 @@ object Clock {
   def nowNs: Long = offsetNs + System.nanoTime()
 }
 
+/** The machine's CPU time so far, in clock ticks summed over its CPUs
+  * (the first line of `/proc/stat`): `run` is time spent running
+  * (user, nice, system, irq, softirq), `steal` time a virtual CPU was
+  * ready to run but the host ran something else. Zeros where there is
+  * no `/proc/stat`. */
+object HostCpu {
+  final case class Ticks(run: Long, steal: Long)
+
+  def now: Ticks = scala.util.Try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    val f = try src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong) finally src.close()
+    Ticks(f(0) + f(1) + f(2) + f(5) + f(6), if (f.length > 7) f(7) else 0L)
+  }.getOrElse(Ticks(0L, 0L))
+}
+
 /** A benchmark call into one layer: `kind` names the call (ctx, build,
   * action, request), `name` the entry or route, `cls` the module or
-  * request class it is attributed to. */
+  * request class it is attributed to; `cpu0` and `cpu1` are the
+  * machine's CPU ticks at its start and end. */
 final case class Span(kind: String, name: String, cls: String, pass: String,
-                      startNs: Long, endNs: Long) {
+                      startNs: Long, endNs: Long, cpu0: HostCpu.Ticks, cpu1: HostCpu.Ticks) {
   def seconds: Double = (endNs - startNs) / 1e9
   def toJson: Map[String, Any] = Map("kind" -> kind, "name" -> name,
-    "cls" -> cls, "pass" -> pass, "start_ns" -> startNs, "end_ns" -> endNs)
+    "cls" -> cls, "pass" -> pass, "start_ns" -> startNs, "end_ns" -> endNs,
+    "run_ticks" -> (cpu1.run - cpu0.run), "steal_ticks" -> (cpu1.steal - cpu0.steal))
 }
 
 /** Records what Spark reports on its public listener buses while

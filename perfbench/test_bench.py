@@ -2,9 +2,9 @@
 
     python3 perfbench/test_bench.py
 
-The span arithmetic is tested here; the fingerprint, call-order and
-request-mix checks run in the JVM (graftbench.SelfTest), which this
-builds first.
+The span arithmetic and the host-speed scaling are tested here; the
+fingerprint, call-order and request-mix checks run in the JVM
+(graftbench.SelfTest), which this builds first.
 """
 import os
 import shutil
@@ -15,6 +15,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 import build  # noqa: E402
+import report  # noqa: E402
 from stats import Windows, covered, geomean, median, self_time  # noqa: E402
 
 
@@ -41,6 +42,33 @@ class SpanTest(unittest.TestCase):
     def test_medians_and_geomean(self):
         self.assertEqual(median([3, 1, 2]), 2)
         self.assertAlmostEqual(geomean([0.1, 10.0]), 1.0)
+
+
+class HostScaleTest(unittest.TestCase):
+    @staticmethod
+    def raw(kernel_ms):
+        spans, t = [], 0
+        for name, build_s, action_s in (("a", 1.0, 1.0), ("b", 0.5, 0.5), ("a", 2.0, 2.0)):
+            for kind, secs in (("build", build_s), ("action", action_s)):
+                spans.append({"kind": kind, "name": name, "cls": "core", "pass": "timed",
+                              "start_ns": t, "end_ns": t + int(secs * 1e9),
+                              "run_ticks": 90, "steal_ticks": 10})
+                t += int(secs * 1e9)
+        return {"workload": "battery", "spans": spans, "session_s": 1.0, "ctx_s": [9.0, 2.0, 3.0],
+                "warm_s": 4.0, "input_bytes": 100, "written_bytes": 400,
+                "speed": [{"pass": "timed", "ns": int(ms * 1e6)} for ms in kernel_ms]}
+
+    def test_times_scale_by_the_median_kernel_time(self):
+        ref = report.KERNEL_REF_MS
+        m = report.end_to_end(self.raw([ref, 2 * ref, 2 * ref, 50 * ref]))
+        # entry medians: a = (2 + 4) / 2 = 3 s, b = 1 s; the host ran at half speed
+        self.assertAlmostEqual(m["run_s"][0], (3.0 + 1.0) / 2)
+        self.assertAlmostEqual(m["geomean_s"][0], 3.0 ** 0.5 / 2)
+        self.assertAlmostEqual(m["setup_s"][0], (1.0 + 3.0 + 4.0) / 2)
+        self.assertAlmostEqual(m["space_amp"][0], 4.0)
+
+    def test_steal_share(self):
+        self.assertAlmostEqual(report.steal_share(self.raw([1.0])), 0.1)
 
 
 class JvmHelpersTest(unittest.TestCase):

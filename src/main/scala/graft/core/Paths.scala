@@ -26,14 +26,12 @@ object Paths {
     * ~10 GB peak heap over a bench sequence (BENCH_r08 diagnostics,
     * woql_path_plus_alt 3.7 s GC per run). */
   private def cp(df: DataFrame): DataFrame =
-    graft.util.Scratch.trackCheckpoint(df.localCheckpoint(true,
-      // SER: checkpoint blocks live as compact byte arrays instead of
-      // millions of row objects — the deserialized default held
-      // 10-13 GB of traced heap across a bench sequence and full-GC
-      // pauses were most of woql_path_plus_alt's in-sequence cost
-      // (BENCH_r09 diag: 8.3 s GC of a 16.5 s double-rep). The decode
-      // cost on re-read is per-block streaming, not per-round.
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    // serialized blocks: the deserialized default held 10-13 GB of
+    // traced heap across a bench sequence and full-GC pauses were most
+    // of woql_path_plus_alt's in-sequence cost (BENCH_r09 diag: 8.3 s
+    // GC of a 16.5 s double-rep). The decode cost on re-read is
+    // per-block streaming, not per-round.
+    graft.util.Scratch.trackCheckpoint(graft.util.FrameCache.checkpoint(df))
 
   /** Lazy union of per-round delta chunks. The accumulated set is only
     * ever READ (anti-joins, the final result) — re-checkpointing the
@@ -55,98 +53,27 @@ object Paths {
       .select(col("src"), col("__d").as("dst"))
   }
 
-  /** Cross-query cache of materialized STEP RELATIONS for the
-    * iterative walks, keyed by (session, [[Ctx.graphKey]], pattern).
-    * The graph key is content-stable (EAV cache dir / store@commit),
-    * so a hit can never serve stale edges; contexts without a key skip
-    * the cache entirely. A long-running engine re-runs path queries
-    * against the same immutable graph constantly — re-materializing
-    * the identical step relation per query was the dominant fixed cost
-    * of the bound-endpoint walks (the same artifact-memoization
-    * contract as the BPE merge table and the IVF codebooks; cached
-    * frames are deliberately NOT Scratch-tracked). Bounded: LRU of
-    * [[MaxEntries]]; relations over the row cap are not cached (at
-    * 100 TB a hub-heavy step relation should not pin executor memory)
-    * and fall back to the query-scoped tracked checkpoint. */
-  private object RelCache {
-    private val MaxEntries = 8
-    private def maxRows: Long = sys.props.get("graft.path.relCacheMaxRows")
-      .orElse(sys.env.get("GRAFT_PATH_RELCACHE_MAX_ROWS"))
-      .map(_.toLong).getOrElse(20000000L)
-    private val lru = new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        // EVICTION MUST NOT UNPERSIST: a concurrent query may still be
-        // joining against this frame, and a localCheckpoint has no
-        // lineage to recompute from. Withdraw the cache declaration
-        // (leak checks may now see it) and let the ContextCleaner
-        // reclaim the blocks once the last reference is gone — the
-        // same end state, without yanking data from under a reader.
-        if (size() > MaxEntries) { deregister(e.getValue); true } else false
-    }
-    private def rddIds(df: DataFrame): Seq[Int] =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-    private def deregister(df: DataFrame): Unit =
-      rddIds(df).foreach(graft.util.Scratch.deregisterCacheRdd)
-    private def releaseFrame(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          graft.util.Scratch.deregisterCacheRdd(l.rdd.id)
-          val _ = l.rdd.unpersist(false)
-      }
-    def getOrBuild(key: String, build: () => DataFrame): DataFrame = {
-      // fast path under the monitor; MATERIALIZATION runs outside it —
-      // holding a global lock through a multi-second Spark job would
-      // serialize every path query engine-wide, including pure hits on
-      // other keys. A miss race can build the same relation twice; the
-      // loser's copy is released (nobody else holds it), the winner's
-      // is served.
-      synchronized { Option(lru.get(key)) } match {
-        case Some(df) => df
-        case None =>
-          val df = build().distinct().localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          if (df.count() > maxRows) graft.util.Scratch.trackCheckpoint(df)
-          else synchronized {
-            Option(lru.get(key)) match {
-              case Some(winner) => releaseFrame(df); winner
-              case None =>
-                // declared cache: leak assertions must not force-drop a
-                // checkpoint (truncated lineage = unrecoverable data)
-                rddIds(df).foreach(graft.util.Scratch.registerCacheRdd)
-                lru.put(key, df); df
-            }
-          }
-      }
-    }
-    def clear(): Unit = synchronized {
-      // test-isolation / session-teardown only: callers guarantee no
-      // query is in flight, so eager unpersist is safe here
-      lru.values().forEach(releaseFrame(_))
-      lru.clear()
-    }
-  }
+  /** Drop every cached step relation (test isolation / session end).
+    * Clears the whole [[graft.util.FrameCache]], folded commits too. */
+  def clearRelCache(): Unit = graft.util.FrameCache.clear()
 
-  /** Drop every cached step relation (test isolation / session end). */
-  def clearRelCache(): Unit = RelCache.clear()
-
-  /** The materialized one-step relation for an iterative walk:
-    * cache-memoized when the context carries a stable graph key,
-    * query-scoped (tracked checkpoint) otherwise. */
+  /** The materialized one-step relation for an iterative walk. A long-
+    * running engine re-runs path queries against the same immutable
+    * graph constantly, so when the context carries a stable graph key
+    * the relation is memoized in [[graft.util.FrameCache]] (the same
+    * artifact-memoization contract as the BPE merge table and the IVF
+    * codebooks). A relation over the cache's row bound, or one over an
+    * unkeyed context, is a query-scoped tracked checkpoint. */
   private def stepRelation(pat: PathPat, ctx: Ctx): DataFrame =
     ctx.graphKey match {
-      case Some(gk) => RelCache.getOrBuild(
-        // keyed by SparkContext identity (applicationId + startTime),
-        // not the session's identityHashCode: cached blocks live in
-        // the CONTEXT's block manager (sharing across sessions of one
-        // context is correct), and a restarted context gets a new
-        // appId/startTime — no hash-reuse collision can serve a frame
-        // bound to a stopped context
-        s"${ctx.spark.sparkContext.applicationId}@" +
-          s"${ctx.spark.sparkContext.startTime}|$gk|$pat",
-        () => compile(pat, ctx))
+      case Some(gk) =>
+        val key = s"$gk|$pat"
+        graft.util.FrameCache.get(ctx.spark, key).getOrElse {
+          val df = graft.util.FrameCache.checkpoint(compile(pat, ctx).distinct())
+          if (df.count() > graft.util.FrameCache.maxRows)
+            graft.util.Scratch.trackCheckpoint(df)
+          else graft.util.FrameCache.put(ctx.spark, key, df)
+        }
       case None => cp(compile(pat, ctx).distinct())
     }
 

@@ -53,9 +53,16 @@ object Bucketing {
               // leftover from a write that died mid-flight (no
               // _SUCCESS): ours to clean now that the lock is held
               if (fs.exists(loc)) fs.delete(loc, true)
-              df.write.bucketBy(buckets, key).sortBy(key)
+              // saveAsTable lays down the files and _SUCCESS BEFORE it
+              // creates the catalog entry: a waiter may adopt the
+              // complete files in that window, and then the table it
+              // registered (same files, same bucket spec) is ours too
+              try df.write.bucketBy(buckets, key).sortBy(key)
                 .format("parquet").option("path", loc.toString)
                 .mode("overwrite").saveAsTable(table)
+              catch {
+                case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException =>
+              }
             }
           } finally fs.delete(lock, false)
         } else {

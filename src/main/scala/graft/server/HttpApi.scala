@@ -115,15 +115,21 @@ object HttpApi {
     // ADDRESSED graph — a branch's own schema triples drive isa there,
     // not the base's — and graphKey re-derives commit-id-keyed:
     // carrying the base key over would poison the path engine's
-    // step-relation cache with the wrong graph's edges.
+    // step-relation cache with the wrong graph's edges. A commit's
+    // graph never changes, so its closure is memoized under the same
+    // key as its fold.
     def addressedCtx(ex: HttpExchange): Ctx = {
-      def at(g: org.apache.spark.sql.DataFrame, commitId: String) =
+      def at(commitId: String) = {
+        val g = store.materialize(commitId)
         ctx.copy(triples = g,
-          subclass = graft.storage.Eav.subclassClosure(spark, g),
-          graphKey = Option(commitId).map(c => s"${store.root}@$c"))
+          subclass = store.derived(commitId, "subclass")(
+            graft.storage.Eav.subclassClosure(spark, g)),
+          graphKey = Some(store.graphKey(commitId)))
+      }
       (param(ex, "commit"), param(ex, "branch")) match {
-        case (Some(c), _) => at(store.materialize(c), c)
-        case (_, Some(b)) => at(store.materializeBranch(b), store.refs(b))
+        case (Some(c), _) => at(c)
+        case (_, Some(b)) => at(store.refs.getOrElse(b,
+          throw new IllegalArgumentException(s"no such branch $b")))
         case _ => ctx
       }
     }

@@ -16,12 +16,23 @@ import org.apache.spark.sql.types._
   *  - a layer = a parquet pair `layers/<id>/{adds,removes}` in the EAV
   *    schema of [[Eav.schema]];
   *  - commits/refs = tiny driver-side parquet catalogs (DAGs are small
-  *    even when data is 100 TB);
+  *    even when data is 100 TB), read and written with parquet-mr on the
+  *    driver ([[CatalogFiles]]) — no catalog access runs a Spark job. A
+  *    commit appends one part file to `_catalog/commits`; the refs are
+  *    one file, replaced by an atomic rename, so a lock-free reader sees
+  *    the old map or the new one, never none (the reference keeps a
+  *    branch head in a small label file the same way);
   *  - materialization = ONE shuffle, not N anti-joins: union every
   *    layer's adds(+seq) and removes(+seq), group by triple, and keep
   *    triples whose latest add outranks their latest remove. This scales
   *    with total delta size and parallelizes perfectly;
-  *  - `optimize` = rewrite the fold as a single base layer (delta
+  *  - fold cache: commit ids are content-addressed, so a commit's folded
+  *    graph never changes. [[materialize]] keeps it as a checkpoint in
+  *    [[graft.util.FrameCache]] under `<root>@<commit id>`, admitted only
+  *    when the chain's layer rows (read from parquet footers, before any
+  *    job runs) fit the cache's row bound;
+  *  - `compact` = the on-disk rollup of one commit's fold (`flat/<id>`),
+  *    `optimize` = rewrite the fold as a single base layer (delta
   *    rollup, like the reference's squash/rollup API).
   */
 final class LayerStore(val spark: SparkSession, val root: String) {
@@ -98,54 +109,67 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     }
   }
 
-  def commits: DataFrame = {
+  private def catalogDir(name: String): java.nio.file.Path =
+    Paths.get(path("_catalog", name))
+
+  /** Rows of the commit catalog, driver-side. */
+  private def commitRows: Seq[CommitRow] = {
     recoverCatalog()
-    val p = path("_catalog", "commits")
-    if (Files.exists(Paths.get(p, "_SUCCESS"))) spark.read.parquet(p)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], commitSchema)
+    val dir = catalogDir("commits")
+    if (!Files.exists(dir.resolve("_SUCCESS"))) Nil
+    else CatalogFiles.parts(dir).flatMap(readCommitPart)
   }
 
+  def commits: DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(commitRows.map(c =>
+      Row(c.id, c.parent.orNull, c.message, c.at)): _*), commitSchema)
+
   def refs: Map[String, String] = {
-    val p = path("_catalog", "refs")
-    if (!Files.exists(Paths.get(p, "_SUCCESS"))) Map.empty
-    else spark.read.parquet(p).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val dir = catalogDir("refs")
+    if (!Files.exists(dir.resolve("_SUCCESS"))) Map.empty
+    else {
+      // a Spark-written catalog holds its own part file until the
+      // first ref move lands RefsFile and then deletes that part
+      val listed = CatalogFiles.parts(dir)
+      val files = listed.filter(_.getFileName.toString == RefsFile) match {
+        case Nil => listed
+        case own => own
+      }
+      try files.flatMap(CatalogFiles.read(_, refCols)).map(r => r(0) -> r(1)).toMap
+      catch {
+        // a listed Spark part was deleted by that move: RefsFile is in place
+        case _: java.io.IOException if files.exists(f => !Files.exists(f)) => refs
+      }
+    }
   }
 
   private def writeRefs(m: Map[String, String]): Unit = withStoreLock(false) {
-    import spark.implicits._
-    m.toSeq.toDF("ref", "commit_id").coalesce(1)
-      .write.mode("overwrite").parquet(path("_catalog", "refs"))
+    writeRefsFile(catalogDir("refs"), m)
   }
 
-  private def appendCommit(id: String, parent: String,
-                           message: String): Unit = withStoreLock(false) {
-    import spark.implicits._
-    Seq((id, parent, message, java.time.Instant.now.toString))
-      .toDF("commit_id", "parent", "message", "at")
-      .write.mode("append").parquet(path("_catalog", "commits"))
+  private def appendCommits(rows: Seq[CommitRow]): Unit = withStoreLock(false) {
+    writeCommitPart(catalogDir("commits"), rows)
   }
+
+  private def appendCommit(id: String, parent: String, message: String): Unit =
+    appendCommits(Seq(CommitRow(id, Option(parent), message,
+      java.time.Instant.now.toString)))
 
   /** Parent chain of a commit, oldest first. */
-  def chain(commitId: String): Seq[String] = {
-    val parents = commits.select("commit_id", "parent").collect()
-      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    Iterator.iterate(Option(commitId))(c => c.flatMap(parents.getOrElse(_, None)))
-      .takeWhile(_.isDefined).map(_.get).toSeq.reverse
-  }
+  def chain(commitId: String): Seq[String] = chainIn(commitRows, commitId)
 
   /** Commit log of a branch, NEWEST first (the reference's `/api/log`
     * route): `(commit_id, parent, message, at)` per commit on the
     * branch's parent chain. Driver-side — the commit DAG is a small
     * catalog even when the data is 100 TB. */
   def log(branch: String): Seq[(String, Option[String], String, String)] = {
-    val meta = commits.collect().map(r => r.getString(0) ->
-      ((Option(r.getString(1)), r.getString(2), r.getString(3)))).toMap
-    chain(refs.getOrElse(branch,
+    val rows = commitRows
+    val meta = rows.map(c => c.id -> c).toMap
+    chainIn(rows, refs.getOrElse(branch,
       throw new IllegalArgumentException(s"no such branch $branch")))
       .reverse.map { id =>
-        val (p, m, at) = meta(id)
-        (id, p, m, at)
+        val c = meta(id)
+        (id, c.parent, c.message, c.at)
       }
   }
 
@@ -171,12 +195,10 @@ final class LayerStore(val spark: SparkSession, val root: String) {
       .agg(sum(col("__add")).as("added"),
         sum(lit(1L) - col("__add")).as("removed"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val meta = commits.collect().map(r => r.getString(0) ->
-      ((r.getString(2), r.getString(3)))).toMap
+    val meta = commitRows.map(c => c.id -> c).toMap
     ids.reverse.flatMap { id =>
       touched.get(id).map { case (a, rm) =>
-        val (msg, at) = meta(id)
-        (id, msg, at, a, rm)
+        (id, meta(id).message, meta(id).at, a, rm)
       }
     }
   }
@@ -188,31 +210,44 @@ final class LayerStore(val spark: SparkSession, val root: String) {
 
   private def readLayer(id: String, side: String): DataFrame = {
     val p = path("layers", id, side)
-    if (Files.exists(Paths.get(p, "_SUCCESS"))) spark.read.parquet(p)
+    // the schema is known: inferring it would run one job per layer
+    if (Files.exists(Paths.get(p, "_SUCCESS"))) spark.read.schema(Eav.schema).parquet(p)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Eav.schema)
   }
 
-  private def conform(df: DataFrame): DataFrame =
-    df.select(Eav.schema.fieldNames.map(col): _*)
+  /** Rows in a layer's adds, from the parquet footers (no job). */
+  private def layerRows(id: String): Long = {
+    val dir = Paths.get(path("layers", id, "adds"))
+    if (!Files.exists(dir.resolve("_SUCCESS"))) 0L
+    else CatalogFiles.parts(dir).map(CatalogFiles.rowCount).sum
+  }
 
-  /** Order-independent content hash of a triple set: per-row md5 folded
-    * with bit_xor + sum + count — fully distributed (no sort), and two
-    * sets differing in ANY row hash differently with overwhelming
-    * probability. Null slots get an explicit marker so `("a",null)` and
-    * `(null,"a")` differ under concat. */
-  private def contentHash(df: DataFrame): String = {
+  private def conform(df: DataFrame): DataFrame =
+    df.select(Eav.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+
+  /** Order-independent content hashes of the adds and removes of a
+    * commit, plus the removes' row count, in ONE aggregation: per-row
+    * md5 folded with bit_xor + sum + count per side — fully distributed
+    * (no sort), and two sets differing in ANY row hash differently with
+    * overwhelming probability. Null slots get an explicit marker so
+    * `("a",null)` and `(null,"a")` differ under concat. */
+  private def contentHashes(a: DataFrame, r: DataFrame): (String, String, Long) = {
     val nullMark = 0.toChar.toString; val sep = 1.toChar.toString
-    val cols = df.columns.toSeq.map(c =>
-      coalesce(col(c).cast(StringType), lit(nullMark)))
-    val rh = conv(substring(md5(concat_ws(sep, cols: _*)), 1, 15), 16, 10)
+    def rh(df: DataFrame) = conv(substring(md5(concat_ws(sep, df.columns.toSeq.map(c =>
+      coalesce(col(c).cast(StringType), lit(nullMark))): _*)), 1, 15), 16, 10)
       .cast(LongType)
-    // sum as decimal(38,0): per-row hashes are ~2^60, a long sum would
-    // overflow under ANSI after a handful of rows
-    val row = df.select(rh.as("__rh"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(__rh)").as("x"),
-        sum(col("__rh").cast(DecimalType(38, 0))).as("s"))
+    def side(i: Int) = {
+      val h = when(col("__side") === i, col("__rh"))
+      // sum as decimal(38,0): per-row hashes are ~2^60, a long sum
+      // would overflow under ANSI after a handful of rows
+      Seq(count(h), bit_xor(h), sum(h.cast(DecimalType(38, 0))))
+    }
+    val row = a.select(lit(0).as("__side"), rh(a).as("__rh"))
+      .unionByName(r.select(lit(1).as("__side"), rh(r).as("__rh")))
+      .agg(side(0).head, side(0).tail ++ side(1): _*)
       .first()
-    s"${row.getLong(0)}:${row.get(1)}:${row.get(2)}"
+    (s"${row.getLong(0)}:${row.get(1)}:${row.get(2)}",
+      s"${row.getLong(3)}:${row.get(4)}:${row.get(5)}", row.getLong(3))
   }
 
   /** Create a commit on `branch` from add/remove triple sets.
@@ -223,10 +258,10 @@ final class LayerStore(val spark: SparkSession, val root: String) {
              message: String): String = withStoreLock(false) {
     val parent = refs.getOrElse(branch, null)
     val a = conform(addsDf); val r = conform(removesDf)
-    val id = sha256Hex(s"$parent|$message|${contentHash(a)}|${contentHash(r)}")
-      .substring(0, 16)
+    val (ha, hr, nRemoves) = contentHashes(a, r)
+    val id = sha256Hex(s"$parent|$message|$ha|$hr").substring(0, 16)
     a.write.mode("overwrite").parquet(path("layers", id, "adds"))
-    if (!r.isEmpty) r.write.mode("overwrite").parquet(path("layers", id, "removes"))
+    if (nRemoves > 0) r.write.mode("overwrite").parquet(path("layers", id, "removes"))
     appendCommit(id, parent, message)
     writeRefs(refs + (branch -> id))
     // store content changed under any previously-profiled plan key
@@ -239,16 +274,36 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     * by one), so an update that deletes a subgraph and re-inserts an
     * identical triple keeps it visible — the reference's commit
     * semantics. */
-  def materialize(commitId: String): DataFrame =
+  def materialize(commitId: String): DataFrame = {
+    val flat = path("flat", commitId, "adds")
     // flat-cache fast path: `compact` materialized this exact commit
     // into one base layer; commit ids are content-addressed so the
     // cache can never go stale — read 1 layer instead of O(history)
-    if (Files.exists(Paths.get(path("flat", commitId, "adds", "_SUCCESS"))))
-      spark.read.parquet(path("flat", commitId, "adds"))
-    else fold(commitId)
+    if (Files.exists(Paths.get(flat, "_SUCCESS"))) spark.read.schema(Eav.schema).parquet(flat)
+    else graft.util.FrameCache.get(spark, graphKey(commitId)).getOrElse {
+      val rows = commitRows
+      val ids = chainIn(rows, commitId)
+      val known = rows.iterator.map(_.id).toSet
+      // only a chain the catalog fully knows is immutable (an unknown
+      // id may yet arrive by unpack); the fold has at most Σ adds rows
+      if (!ids.forall(known) ||
+          ids.map(layerRows).sum > graft.util.FrameCache.maxRows) fold(ids)
+      else graft.util.FrameCache.put(spark, graphKey(commitId),
+        graft.util.FrameCache.checkpoint(fold(ids)))
+    }
+  }
 
-  private def fold(commitId: String): DataFrame = {
-    val ids = chain(commitId)
+  /** Cache key of a commit's graph and of what derives from it. */
+  def graphKey(commitId: String): String = s"$root@$commitId"
+
+  /** `build`, a frame derived from commit `commitId`'s graph, memoized
+    * under `name` exactly while [[materialize]] holds that graph in the
+    * cache: one admission rule for a fold and what derives from it. */
+  def derived(commitId: String, name: String)(build: => DataFrame): DataFrame =
+    if (graft.util.FrameCache.get(spark, graphKey(commitId)).isEmpty) build
+    else graft.util.FrameCache.getOrPut(spark, s"${graphKey(commitId)}|$name")(build)
+
+  private def fold(ids: Seq[String]): DataFrame = {
     val parts = ids.zipWithIndex.flatMap { case (id, i) =>
       Seq(adds(id).withColumn("__seq", lit(i.toLong * 2 + 2)),
         removes(id).withColumn("__seq", lit(-(i.toLong * 2 + 1))))
@@ -308,13 +363,11 @@ final class LayerStore(val spark: SparkSession, val root: String) {
   def optimize(branchName: String,
                message: String = "optimize"): String = withStoreLock(false) {
     val mat = materialize(refs(branchName))
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Eav.schema)
     // new root commit (no parent): detach ref onto the compacted base
     val id = sha256Hex(s"optimize|$message|${refs(branchName)}").substring(0, 16)
     conform(mat).write.mode("overwrite").parquet(path("layers", id, "adds"))
     appendCommit(id, null, message)
     writeRefs(refs + (branchName -> id))
-    val _ = empty
     id
   }
 
@@ -333,7 +386,7 @@ final class LayerStore(val spark: SparkSession, val root: String) {
       throw new IllegalArgumentException(s"no such branch $branchName"))
     val n = chain(head).size
     if (!Files.exists(Paths.get(path("flat", head, "adds", "_SUCCESS"))))
-      conform(fold(head)).write.mode("overwrite")
+      conform(fold(chain(head))).write.mode("overwrite")
         .parquet(path("flat", head, "adds"))
     n
   }
@@ -371,10 +424,10 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     val flatDir = new java.io.File(path("flat"))
     val flatIds = Option(flatDir.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).toSet
-    val catalog = commits.collect()
-    val catalogIds = catalog.map(_.getString(0)).toSet
+    val catalog = commitRows
+    val catalogIds = catalog.map(_.id).toSet
     val roots = refs.values.toSet ++ (flatIds & catalogIds)
-    val reachable = roots.flatMap(chain(_)) ++ roots
+    val reachable = roots.flatMap(chainIn(catalog, _)) ++ roots
     val layersDir = new java.io.File(path("layers"))
     val onDisk = Option(layersDir.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).toSet
@@ -385,12 +438,12 @@ final class LayerStore(val spark: SparkSession, val root: String) {
         .deleteDirectory(new java.io.File(path("layers", id))))
       staleFlat.foreach(id => org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(path("flat", id))))
-      val kept = catalog.filter(r => reachable.contains(r.getString(0)))
+      val kept = catalog.filter(c => reachable.contains(c.id))
       if (kept.length != catalog.length) {
-        val df = spark.createDataFrame(
-          spark.sparkContext.parallelize(kept.toSeq, 1), commitSchema)
-        val tmp = Paths.get(path("_catalog", "commits.gc-tmp"))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val tmp = catalogDir("commits.gc-tmp")
+        if (Files.exists(tmp))
+          org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+        writeCommitPart(tmp, kept) // _SUCCESS marks the tmp complete
         // crash-safe swap (the r15 advisor's delete-then-rename window
         // left the store with NO catalog on a crash between the two):
         // rename the live catalog aside, move the complete tmp in, drop
@@ -424,8 +477,7 @@ final class LayerStore(val spark: SparkSession, val root: String) {
   /** Every commit id in the catalog — the receiver's `have` set for
     * pack negotiation (DAG-sized; bounded like the other catalog
     * collects). */
-  def commitIds: Set[String] =
-    commits.select("commit_id").collect().map(_.getString(0)).toSet
+  def commitIds: Set[String] = commitRows.map(_.id).toSet
 
   /** Pack the layers + metadata of a branch into a transfer directory.
     * `have` = commit ids the receiver already holds (refs negotiation,
@@ -436,18 +488,18 @@ final class LayerStore(val spark: SparkSession, val root: String) {
   def pack(branchName: String, dest: String,
            have: Set[String] = Set.empty): Unit = {
     val head = refs(branchName)
-    val ids = chain(head).filterNot(have)
+    val rows = commitRows
+    val ids = chainIn(rows, head).filterNot(have)
     ids.foreach { id =>
       copyDir(java.nio.file.Paths.get(path("layers", id)),
         java.nio.file.Paths.get(dest, "layers", id))
     }
-    import spark.implicits._
-    val meta =
-      if (ids.isEmpty) commits.limit(0)
-      else commits.filter(col("commit_id").isin(ids: _*))
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$dest/_catalog/commits")
-    Seq((branchName, head)).toDF("ref", "commit_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dest/_catalog/refs")
+    val commitsDir = Paths.get(dest, "_catalog", "commits")
+    if (Files.exists(commitsDir))
+      org.apache.commons.io.FileUtils.deleteDirectory(commitsDir.toFile)
+    val packed = ids.toSet
+    writeCommitPart(commitsDir, rows.filter(c => packed(c.id)))
+    writeRefsFile(Paths.get(dest, "_catalog", "refs"), Map(branchName -> head))
   }
 
   /** Unpack a transfer directory into this store (fetch); does not move
@@ -458,10 +510,9 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     Option(layerDir.listFiles()).getOrElse(Array.empty).foreach { l =>
       copyDir(l.toPath, java.nio.file.Paths.get(path("layers", l.getName)))
     }
-    val known = commits.select("commit_id").collect().map(_.getString(0)).toSet
-    val newRows = packed.commits.filter(!col("commit_id").isin(known.toSeq: _*))
-    if (!newRows.isEmpty)
-      newRows.write.mode("append").parquet(path("_catalog", "commits"))
+    val known = commitIds
+    val newRows = packed.commitRows.filterNot(c => known(c.id))
+    if (newRows.nonEmpty) appendCommits(newRows)
     packed.refs
   }
 
@@ -613,6 +664,40 @@ object LayerStore {
   val commitSchema: StructType = StructType(Seq(
     StructField("commit_id", StringType), StructField("parent", StringType),
     StructField("message", StringType), StructField("at", StringType)))
+
+  private final case class CommitRow(id: String, parent: Option[String],
+                                     message: String, at: String)
+
+  private val commitCols = commitSchema.fieldNames.toSeq
+  private val refCols = Seq("ref", "commit_id")
+  /** The refs file a ref move writes (and atomically replaces). */
+  private val RefsFile = "part-00000.parquet"
+
+  private def readCommitPart(f: java.nio.file.Path): Seq[CommitRow] =
+    CatalogFiles.read(f, commitCols).map(r => CommitRow(r(0), Option(r(1)), r(2), r(3)))
+
+  private def writeCommitPart(dir: java.nio.file.Path, rows: Seq[CommitRow]): Unit =
+    CatalogFiles.write(dir, s"part-${java.util.UUID.randomUUID()}.parquet",
+      commitCols, rows.map(c => Seq(c.id, c.parent.orNull, c.message, c.at)))
+
+  private def writeRefsFile(dir: java.nio.file.Path, m: Map[String, String]): Unit = {
+    CatalogFiles.write(dir, RefsFile, refCols,
+      m.toSeq.sorted.map { case (r, c) => Seq(r, c) })
+    // a Spark-written catalog's own part file (and its checksum) goes
+    // once RefsFile has replaced it
+    CatalogFiles.parts(dir).filterNot(_.getFileName.toString == RefsFile)
+      .foreach { p =>
+        Files.deleteIfExists(p)
+        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+      }
+  }
+
+  /** Parent chain of `commitId` over catalog `rows`, oldest first. */
+  private def chainIn(rows: Seq[CommitRow], commitId: String): Seq[String] = {
+    val parents = rows.map(c => c.id -> c.parent).toMap
+    Iterator.iterate(Option(commitId))(c => c.flatMap(parents.getOrElse(_, None)))
+      .takeWhile(_.isDefined).map(_.get).toSeq.reverse
+  }
 
   // per-root monitors: serialize in-process store-lock holders so the
   // OS FileLock (which is per-JVM) never self-overlaps

@@ -45,6 +45,22 @@ object Scratch {
     df
   }
 
+  private val evicted = new java.util.concurrent.ConcurrentLinkedQueue[
+    java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
+
+  /** Register a local checkpoint a cache has evicted: released at the
+    * next [[drain]] like [[trackCheckpoint]], but held only WEAKLY, so
+    * nothing here keeps it reachable — where no drain comes (a server
+    * between requests), the ContextCleaner frees its blocks once the
+    * last query holding the frame lets go, as for any unreferenced RDD. */
+  def trackEvicted(df: org.apache.spark.sql.DataFrame): Unit = {
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        evicted.add(new java.lang.ref.WeakReference(l.rdd))
+    }
+    val _ = evicted.removeIf(_.get == null) // collected: nothing to free
+  }
+
   /** Unpersist every tracked frame (non-blocking); returns how many. */
   def drain(): Int = {
     var n = 0
@@ -59,6 +75,14 @@ object Scratch {
       try { f(); n += 1 }
       catch { case _: Throwable => }
       f = cleanups.poll()
+    }
+    var w = evicted.poll()
+    while (w != null) {
+      Option(w.get).foreach { rdd =>
+        try { val _ = rdd.unpersist(false); n += 1 }
+        catch { case _: Throwable => }
+      }
+      w = evicted.poll()
     }
     n
   }

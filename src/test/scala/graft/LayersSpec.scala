@@ -16,6 +16,26 @@ class LayersSpec extends AnyFunSuite {
   private val empty = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Eav.schema)
 
+  /** `body`'s result and the Spark jobs it ran on this thread. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"layers-spec-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted")
+    try {
+      val r = body
+      org.apache.spark.ListenerBusFlush(sc)
+      (r, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
   test("commit + materialize folds adds and removes") {
     val st = freshStore()
     val c1 = st.commit("main", triples((":a", "p", "v1"), (":b", "p", "v2")), empty, "base")
@@ -307,6 +327,122 @@ class LayersSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"${st.root}/_catalog/commits.gc-old")))
     assert(st.materializeBranch("main").count() == 2)
+  }
+
+  test("catalog reads run no Spark job; a second materialize of an id runs none") {
+    val st = freshStore()
+    val c1 = st.commit("main", triples((":a", "p", "v1"), (":b", "p", "v2")), empty, "c1")
+    val c2 = st.commit("main", triples((":c", "p", "v3")), triples((":a", "p", "v1")), "c2")
+    assert(jobsOf(st.refs) == ((Map("main" -> c2), 0)))
+    assert(jobsOf(st.chain(c2)) == ((Seq(c1, c2), 0)))
+    assert(jobsOf(st.log("main").map(_._1)) == ((Seq(c2, c1), 0)))
+    assert(jobsOf(st.commitIds) == ((Set(c1, c2), 0)))
+    assert(st.materialize(c2).count() == 2)
+    val (again, jobs) = jobsOf(st.materialize(c2))
+    assert(jobs == 0)
+    assert(again.select("s").collect().map(_.getString(0)).toSet == Set(":b", ":c"))
+  }
+
+  test("a commit id the catalog does not hold is not cached before it arrives") {
+    val a = freshStore(); val b = freshStore()
+    val c1 = a.commit("main", triples((":a", "p", "v1")), empty, "c1")
+    assert(b.materialize(c1).count() == 0) // unknown to b: no layers yet
+    a.push(b, "main")
+    assert(b.materialize(c1).count() == 1)
+  }
+
+  test("a commit runs exactly 4 Spark jobs: one hash aggregation, two layer writes") {
+    val st = freshStore()
+    st.commit("main", triples((":a", "p", "v1")), empty, "c1")
+    val adds = triples((":b", "p", "v2")); val rm = triples((":a", "p", "v1"))
+    val (id, jobs) = jobsOf(st.commit("main", adds, rm, "c2"))
+    assert(jobs == 4)
+    assert(st.refs("main") == id)
+  }
+
+  /** Moves `dev` 50 times and creates or deletes `tmp` between moves
+    * (so the refs file changes length) while a lock-free reader polls
+    * `refs`: the reader never fails and never finds `main` or `dev`
+    * missing. */
+  private def refsRace(st: LayerStore, c1: String, c2: String): Unit = {
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val missing = new java.util.concurrent.atomic.AtomicInteger()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reader = new Thread(() => while (!stop.get()) {
+      try {
+        val m = st.refs
+        if (!m.contains("main") || !m.contains("dev")) missing.incrementAndGet()
+      } catch { case e: Throwable => errors.add(e) }
+      reads.incrementAndGet()
+    })
+    reader.start()
+    try (1 to 50).foreach { i =>
+      st.reset("dev", if (i % 2 == 0) c2 else c1)
+      if (i % 2 == 0) st.branch("tmp", "main") else if (i > 1) st.deleteBranch("tmp")
+    } finally { stop.set(true); reader.join() }
+    assert(errors.isEmpty, errors.toString)
+    assert(reads.get() > 0)
+    assert(missing.get() == 0)
+    assert(st.refs == Map("main" -> c2, "dev" -> c2, "tmp" -> c2))
+  }
+
+  test("a lock-free reader never finds a moving branch missing") {
+    val st = freshStore()
+    val c1 = st.commit("main", triples((":a", "p", "v1")), empty, "c1")
+    val c2 = st.commit("main", triples((":b", "p", "v2")), empty, "c2")
+    st.branch("dev", "main")
+    refsRace(st, c1, c2)
+  }
+
+  test("a lock-free reader never finds a branch missing while a Spark-written refs file is replaced") {
+    import spark.implicits._
+    val st = freshStore()
+    val c1 = st.commit("main", triples((":a", "p", "v1")), empty, "c1")
+    val c2 = st.commit("main", triples((":b", "p", "v2")), empty, "c2")
+    Seq(("main", c2), ("dev", c2)).toDF("ref", "commit_id").coalesce(1)
+      .write.mode("overwrite").parquet(s"${st.root}/_catalog/refs")
+    assert(st.refs == Map("main" -> c2, "dev" -> c2))
+    refsRace(st, c1, c2)
+  }
+
+  test("a catalog written by Spark reads the same and accepts a new commit") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    // the store as the Spark-writing catalog left it: layers and
+    // catalog via df.write.parquet, one commits part file per append
+    val root = Files.createTempDirectory("graft-layers").toString
+    triples((":a", "p", "v1"), (":b", "p", "v2"))
+      .write.parquet(s"$root/layers/0000000000000c01/adds")
+    triples((":c", "p", "v3")).write.parquet(s"$root/layers/0000000000000c02/adds")
+    triples((":a", "p", "v1")).write.parquet(s"$root/layers/0000000000000c02/removes")
+    val log = Seq(("0000000000000c01", null: String, "base", "2026-01-01T00:00:00Z"),
+      ("0000000000000c02", "0000000000000c01", "delta", "2026-01-02T00:00:00Z"))
+    log.foreach(c => Seq(c).toDF("commit_id", "parent", "message", "at")
+      .write.mode("append").parquet(s"$root/_catalog/commits"))
+    Seq(("main", "0000000000000c02"), ("mid", "0000000000000c01"))
+      .toDF("ref", "commit_id").coalesce(1).write.parquet(s"$root/_catalog/refs")
+
+    val st = LayerStore.open(spark, root)
+    assert(st.refs == Map("main" -> "0000000000000c02", "mid" -> "0000000000000c01"))
+    assert(st.chain("0000000000000c02") == Seq("0000000000000c01", "0000000000000c02"))
+    assert(st.log("main") == log.reverse.map(c => (c._1, Option(c._2), c._3, c._4)))
+    def subjects(b: String) = st.materializeBranch(b).select("s").collect()
+      .map(_.getString(0)).toSet
+    assert(subjects("main") == Set(":b", ":c"))
+    assert(subjects("mid") == Set(":a", ":b"))
+
+    val c3 = st.commit("main", triples((":d", "p", "v4")), empty, "more")
+    assert(st.refs == Map("main" -> c3, "mid" -> "0000000000000c01"))
+    assert(st.log("main").map(_._1) == Seq(c3, "0000000000000c02", "0000000000000c01"))
+    assert(subjects("main") == Set(":b", ":c", ":d"))
+    // the layout stays readable by any parquet reader
+    assert(spark.read.parquet(s"$root/_catalog/commits").count() == 3)
+    assert(spark.read.parquet(s"$root/_catalog/refs").as[(String, String)]
+      .collect().toMap == st.refs)
+    val refParts = Files.list(Paths.get(s"$root/_catalog/refs")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet"))
+    assert(refParts.length == 1)
   }
 
   test("validator catches dangling refs, range, cardinality violations") {

@@ -9,12 +9,28 @@ a DECIMAL(38,18) that differs only in rendering WILL be flagged, which
 is exactly what the r2 driver gate did and the old `.round(6)` pandas
 compare could not see.
 
+It is also type-strict where a typed hash compare is: an oracle column
+of a type Spark cannot write (HUGEINT, UHUGEINT or any unsigned integer,
+e.g. what DuckDB's SUM(BIGINT) returns) fails the entry, because such a
+compare fails on it even when the rendered values agree. Cast the
+oracle column to the engine's type.
+
 Usage: python3 tools/oracle_compare.py <sf_dir> <verify_out_dir> [query ...]
 """
-import sys, json, duckdb
+import re, sys, json, duckdb
 
 TABLES = ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
           'lineitem', 'events', 'documents', 'embeddings']
+
+
+# types DuckDB can return and Spark cannot write, also inside nested types
+NON_SPARK_TYPE = re.compile(r'\b(U?HUGEINT|UTINYINT|USMALLINT|UINTEGER|UBIGINT)\b')
+
+
+def non_spark_columns(con, q):
+    """(name, type) of each column of q whose type Spark cannot write."""
+    return [(name, typ) for name, typ, *_ in con.sql(f"DESCRIBE ({q})").fetchall()
+            if NON_SPARK_TYPE.search(typ.upper())]
 
 
 def canon(con, q):
@@ -48,8 +64,13 @@ def main():
             ng = con.sql(f"SELECT count(*) FROM ({got_q})").fetchone()[0]
             d = con.sql(f"SELECT count(*) FROM (({a} EXCEPT ALL {b}) "
                         f"UNION ALL ({b} EXCEPT ALL {a}))").fetchone()[0]
-            ok = (nw == ng) and d == 0
-            print(f"{name}: {'MATCH' if ok else f'MISMATCH rows {nw} vs {ng}, {d} differing'}")
+            bad_types = non_spark_columns(con, sql)
+            ok = (nw == ng) and d == 0 and not bad_types
+            if bad_types:
+                print(f"{name}: MISMATCH oracle column types Spark cannot write: "
+                      + ", ".join(f"{c} {t}" for c, t in bad_types))
+            else:
+                print(f"{name}: {'MATCH' if ok else f'MISMATCH rows {nw} vs {ng}, {d} differing'}")
             if not ok:
                 bad += 1
                 for r in con.sql(f"({a} EXCEPT ALL {b}) LIMIT 3").fetchall():

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Headline queries span the engine surface: WOQL compiler (join,
@@ -116,47 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // With parallelismFirst (the default) AQE refuses to coalesce
-      // below the core count, so a dim-sized shuffle still schedules
-      // 32 near-empty tasks — the fixed floor that dominates every
-      // sub-second battery entry. Size-based coalescing collapses
-      // those to 1–2 tasks. The advisory size must stay SMALL here:
-      // at the default 64m a mid-size (~100 MB) shuffle coalesces to
-      // 2 tasks and runs 1/16th-parallel (measured: graph_triangles
-      // 4.4 s → 19.9 s). 1m keeps every shuffle above ~32 MB at full
-      // 32-way parallelism while sub-MB dim shuffles still collapse.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // ContextCleaner only reclaims shuffle files/broadcasts when the
-      // DRIVER GCs; with a 24g heap a 5-minute battery may never
-      // old-gen-GC, so ~90 queries of shuffle files pile up on disk and
-      // late shuffle-heavy entries slow 2-3x (measured: graph_triangles
-      // 4.3s standalone vs 10s at position ~90 with identical plans and
-      // near-zero gc_ms). Default periodicGC is 30min — far past one
-      // battery; 30s keeps the cleaner live at negligible cost.
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Streaming state width: the replayed streams carry a few thousand
-    // state keys, so 8 state partitions hold them comfortably while
-    // cutting the per-micro-batch per-partition store-commit machinery
-    // that dominates these queries at bench scale (32 partitions × 2
-    // stores of RocksDB commits measured ~2× the state-bound queries'
-    // time). Scoped to streaming queries only (Events.runToTable
-    // restores the session width); a real deployment sizes this to
-    // state volume ÷ executor cores, often WIDER than batch shuffle.
-    if (!sys.props.contains("graft.stream.shuffle") &&
-        !sys.env.contains("GRAFT_STREAM_SHUFFLE"))
-      sys.props("graft.stream.shuffle") = "8"
+    val spark = Graft.session()
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal gate artifact: run the heavyweight battery entries
   * at sf1 (10× sf0.1, built by [[ScaleUp]]), min-of-N, and write the
   * results as a DIFFABLE markdown table to `BENCH_SF1.md` — so an sf1
@@ -93,20 +91,7 @@ object BenchSf1 {
     val sfDir = if (args.length > 0) args(0) else "target/sf1"
     val reps = if (args.length > 1) args(1).toInt else 3
     val outFile = if (args.length > 2) args(2) else "BENCH_SF1.md"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (!sys.props.contains("graft.stream.shuffle"))
-      sys.props("graft.stream.shuffle") = "8"
+    val spark = Graft.session()
     val _ = Graft.ctx(spark, sfDir) // warm encode (uncounted)
 
     val rows = heavyweights.map { name =>
@@ -127,7 +112,7 @@ object BenchSf1 {
       // this single-JVM rehearsal (first run: graph_triangles 96 s
       // min / 20 s gc after the path family, vs 31 s in a dedicated
       // JVM) — drop them so each entry starts from a clean block
-      // manager, like the per-entry BenchOne protocol it replaces
+      // manager
       graft.core.Paths.clearRelCache()
       System.gc(); Thread.sleep(150); System.gc()
       val good = times.filter(_._3)

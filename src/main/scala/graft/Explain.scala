@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan for selected
   * queries so pushdown / partition pruning / broadcast decisions can be
   * reviewed (`runMain graft.Explain <sfDir> <query...>`). */
@@ -13,13 +11,7 @@ object Explain {
         "rel_broadcast_join", "woql_path_plus_alt", "sim_topk_lsh",
         "rel_interval_overlap", "rel_sessionize", "emb_kmeans",
         "sim_topk_ivf_trained", "graph_pagerank")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       if (n == "__boundnum") {

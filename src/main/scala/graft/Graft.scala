@@ -16,11 +16,64 @@ import graft.storage.Eav
   * database; here it lives under target/. */
 object Graft {
 
+  /** Root of every engine-written artifact (EAV cache, staged streams,
+    * corpus indexes): `GRAFT_EAV_CACHE`, else `target/eav` under the
+    * working directory. */
+  val eavRoot: String = sys.env.getOrElse("GRAFT_EAV_CACHE",
+    new java.io.File("target/eav").getAbsolutePath)
+
   /** Cache layout version — bump when Eav.schema changes so stale
     * parquet from an earlier round is never read with the new schema. */
-  val cacheRoot: String =
-    sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") + "/v3"
+  val cacheRoot: String = eavRoot + "/v3"
   private val ctxCache = new java.util.concurrent.ConcurrentHashMap[String, Ctx]()
+
+  /** The one Spark session every main runs under, so a plan that
+    * `Verify` or `Explain` dumps is the plan `Bench` timed. Cores come
+    * from `SPARK_GRAFT_CPUS`, else every core of the machine. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      // With parallelismFirst (the default) AQE refuses to coalesce
+      // below the core count, so a dim-sized shuffle still schedules
+      // 32 near-empty tasks — the fixed floor that dominates every
+      // sub-second battery entry. Size-based coalescing collapses
+      // those to 1–2 tasks. The advisory size must stay SMALL here:
+      // at the default 64m a mid-size (~100 MB) shuffle coalesces to
+      // 2 tasks and runs 1/16th-parallel (measured: graph_triangles
+      // 4.4 s → 19.9 s). 1m keeps every shuffle above ~32 MB at full
+      // 32-way parallelism while sub-MB dim shuffles still collapse.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      // ContextCleaner only reclaims shuffle files/broadcasts when the
+      // DRIVER GCs; with a 24g heap a 5-minute battery may never
+      // old-gen-GC, so ~90 queries of shuffle files pile up on disk and
+      // late shuffle-heavy entries slow 2-3x (measured: graph_triangles
+      // 4.3s standalone vs 10s at position ~90 with identical plans and
+      // near-zero gc_ms). Default periodicGC is 30min — far past one
+      // battery; 15s keeps the cleaner live at negligible cost.
+      .config("spark.cleaner.periodicGC.interval", "15s")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Streaming state width: the replayed streams carry a few thousand
+    // state keys, so 8 state partitions hold them comfortably while
+    // cutting the per-micro-batch per-partition store-commit machinery
+    // that dominates these queries at bench scale (32 partitions × 2
+    // stores of RocksDB commits measured ~2× the state-bound queries'
+    // time). Scoped to streaming queries only (Events.runToTable
+    // restores the session width); a real deployment sizes this to
+    // state volume ÷ executor cores, often WIDER than batch shuffle.
+    if (!sys.props.contains("graft.stream.shuffle") &&
+        !sys.env.contains("GRAFT_STREAM_SHUFFLE"))
+      sys.props("graft.stream.shuffle") = "8"
+    spark
+  }
 
   def ctx(spark: SparkSession, sfDir: String): Ctx =
     ctxCache.computeIfAbsent(sfDir, _ => build(spark, sfDir))
@@ -54,22 +107,7 @@ object Graft {
         .coalesce(1).write.mode("overwrite").parquet(closureDir)
     }
     val closure = spark.read.parquet(closureDir)
-    // Functional predicates (≤1 triple per subject) enable the
-    // compiler's star-join collapse. Default OFF: measured at sf0.1
-    // (BenchOne, min of 3), AQE broadcast-join chains beat the pivot's
-    // subject shuffle on every star query (flagship 0.68s vs 3.31s) —
-    // partition-pruned per-predicate scans are small enough to
-    // broadcast. The pivot wins only when both join sides exceed the
-    // broadcast threshold (billion-subject stars), so it stays an
-    // opt-in knob for that regime: GRAFT_STAR_FUSION=on.
-    val funcPreds =
-      if (sys.env.getOrElse("GRAFT_STAR_FUSION", "off") != "on") Set.empty[String]
-      else triples.filter(col("g") === "instance")
-        .groupBy(col("p"), col("s")).count()
-        .groupBy(col("p")).agg(max(col("count")).as("m"))
-        .filter(col("m") === 1)
-        .select("p").collect().map(_.getString(0)).toSet
-    Ctx(spark, triples, closure, functionalPreds = funcPreds,
+    Ctx(spark, triples, closure,
       // the encoded EAV dir is immutable once written — a stable
       // identity for cross-query memoization (path step relations)
       graphKey = Some(dir))

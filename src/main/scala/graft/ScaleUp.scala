@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Derive an sf1-scale dataset (10× sf0.1) for the scale-linearity
@@ -25,15 +25,9 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val dst = if (args.length > 1) args(1) else "/root/repo/target/sf1"
+    val dst = if (args.length > 1) args(1) else "target/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     // events.parquet may carry TIMESTAMP(NANOS); read those as raw
     // long (micros/NTZ files are unaffected). ts passes through
     // unchanged — Graft.events normalizes the type on read.

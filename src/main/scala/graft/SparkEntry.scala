@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{ExtQueries, VersionQueries, WoqlQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query entry points and their oracles — see SURVEY.md §7.
   * Each `queries` entry exercises one operator of the SURVEY §2
   * inventory (WOQL engine) or one LLM-pipeline extension operator;
   * `oracleSql` holds the DuckDB-equivalent SQL over the raw parquet. */

@@ -142,12 +142,6 @@ final case class SortListQ(listVar: String, into: String) extends Woql
   * materializing per-group lists just to aggregate them. */
 final case class GroupAgg(fn: String, template: Seq[String], by: Seq[String],
                           q: Woql, into: String) extends Woql
-/** INTERNAL: star-join of triple patterns sharing a subject variable,
-  * all with bound FUNCTIONAL predicates — compiled as one scan + one
-  * groupBy(subject) pivot instead of N-1 self-joins. Produced by the
-  * compiler's star fusion, never by users. */
-final case class StarPat(subjVar: String, g: String,
-                         items: Seq[(String, Term)]) extends Woql
 /** INTERNAL: a grouped count that JOINS BACK into the enclosing
   * conjunction — `into` = per-`by` solution count of the independent
   * sub-query `q`, conj-joined on `by` (inner semantics: a parent with

@@ -17,9 +17,6 @@ final case class Ctx(
     subclass: DataFrame,
     adds: String => DataFrame = _ => null,
     removes: String => DataFrame = _ => null,
-    /** Predicates with ≤1 triple per subject — enables star-join
-      * collapse (one scan + one shuffle for a subject's pattern star). */
-    functionalPreds: Set[String] = Set.empty,
     /** Resource resolver for [[Using]]: maps "branch/<b>" /
       * "commit/<c>" to an addressed Ctx (triples AND subclass frames
       * re-derived from the addressed graph). Wired by
@@ -413,33 +410,7 @@ object Compiler {
       conj(cur, bf)
 
     case And(qs) =>
-      starFuse(fuse(qs.toList), ctx).foldLeft(cur)((acc, sub) => compile(sub, acc))
-
-    case StarPat(subjVar, g, items) =>
-      // one partition-pruned scan over the predicate set, one shuffle
-      val preds = items.map(_._1)
-      val scan = ctx.triples.filter(col("g") === g && col("p").isin(preds: _*))
-      val aggs = items.zipWithIndex.map { case ((p, _), i) =>
-        max(when(col("p") === p, objVal)).as(s"__o$i")
-      }
-      var df = scan.groupBy(col("s")).agg(aggs.head, aggs.tail: _*)
-      // inner-join semantics: every pattern of the star must match
-      items.indices.foreach(i => df = df.filter(col(s"__o$i").isNotNull))
-      val proj = scala.collection.mutable.LinkedHashMap[String, Column](
-        subjVar -> iriVal(col("s")))
-      items.zipWithIndex.foreach { case ((_, o), i) =>
-        o match {
-          case V(n) =>
-            if (proj.contains(n)) df = df.filter(proj(n) === col(s"__o$i"))
-            else proj(n) = col(s"__o$i")
-          case c: Term => df = df.filter(col(s"__o$i") === ofTerm(c))
-        }
-      }
-      conj(cur, BF(df.select(proj.map { case (n, c) => c.as(n) }.toSeq: _*),
-        proj.keySet.toSet,
-        // the star subject is iriVal-built from a non-null EAV subject;
-        // object slots can bind any value kind
-        iriVars = Set(subjVar)))
+      fuse(qs.toList).foldLeft(cur)((acc, sub) => compile(sub, acc))
 
     case GroupAgg(fn, template, by, sub, into) =>
       val inner = compile(sub, cur)
@@ -1129,65 +1100,6 @@ object Compiler {
       GroupAgg("count", tmpl, by, q, nv) :: fuse(rest)
     case h :: t => h :: fuse(t)
     case Nil    => Nil
-  }
-
-  /** Star fusion: triple patterns inside one And that share a subject
-    * VARIABLE, with bound functional predicates and var/const objects,
-    * collapse into a [[StarPat]] at the position of the first member.
-    * Safe because conjunction order doesn't change the solution set and
-    * functional predicates contribute ≤1 row per subject, so join
-    * multiplicities are unaffected (the property suite pins the
-    * reorder law). */
-  /** Ops that reshape or consume the binding frame: fusion never moves a
-    * pattern across one of these. */
-  private def isBarrier(q: Woql): Boolean = q match {
-    case _: GroupBy | _: GroupAgg | _: CountQ | _: Select | _: Distinct |
-         _: OrderBy | _: Limit | _: Start | _: SumList | _: LengthList |
-         _: SortListQ | _: MemberQ | _: JoinS | _: Once | _: WhenQ => true
-    case _ => false
-  }
-
-  private def starFuse(qs: List[Woql], ctx: Ctx): List[Woql] = {
-    if (ctx.functionalPreds.isEmpty) return qs
-    // split into segments at barriers; fuse within each segment
-    val out = List.newBuilder[Woql]
-    var rest = qs
-    while (rest.nonEmpty) {
-      val (segment, tail) = rest.span(q => !isBarrier(q))
-      out ++= fuseSegment(segment, ctx)
-      tail.headOption.foreach(out += _)
-      rest = if (tail.isEmpty) Nil else tail.tail
-    }
-    out.result()
-  }
-
-  private def fuseSegment(seg: List[Woql], ctx: Ctx): List[Woql] = {
-    // vars that any non-triple, non-Cmp op in the segment touches could
-    // be ASSIGNED by it — patterns binding those vars must not move
-    val hazard = seg.collect {
-      case q if !q.isInstanceOf[TriplePat] && !q.isInstanceOf[Cmp] => q
-    }
-    def safeVar(n: String): Boolean = !mentions(hazard, n)
-    def eligible(q: Woql): Option[(String, String, (String, Term))] = q match {
-      case TriplePat(V(sv), Node(p), o, g)
-          if ctx.functionalPreds(p) && safeVar(sv) &&
-            (o match { case V(n) => safeVar(n); case _ => true }) =>
-        Some((sv, g, (p, o)))
-      case _ => None
-    }
-    val groups = seg.flatMap(eligible).groupBy(t => (t._1, t._2))
-      .filter(_._2.size >= 2)
-      .map { case (k, v) => k -> v.map(_._3) }
-    if (groups.isEmpty) return seg
-    val emitted = scala.collection.mutable.Set[(String, String)]()
-    seg.flatMap { q =>
-      eligible(q) match {
-        case Some((sv, g, _)) if groups.contains((sv, g)) =>
-          if (emitted.add((sv, g))) Some(StarPat(sv, g, groups((sv, g))))
-          else None
-        case _ => Some(q)
-      }
-    }
   }
 
   /** Conservative check whether any op in `qs` references string `v`

@@ -8,7 +8,7 @@ import org.json4s.jackson.JsonMethods
   * a class object `{"@type": "Select", ...}`). Domain = the wire subset
   * the reader parses: `JsonWoql.parse(JsonWoqlWrite.write(q)) == q` for
   * every supported query, so stored/transported queries round-trip.
-  * Engine-internal nodes (GroupAgg, StarPat, GroupCount) and local-resource ops
+  * Engine-internal nodes (GroupAgg, GroupCount) and local-resource ops
   * (get/put/with) raise — they are not part of the reference wire
   * format. */
 object JsonWoqlWrite {

@@ -232,15 +232,16 @@ object Dedup {
   }
 
   /** Materialize the corpus side of [[incremental]] as a parquet
-    * artifact — the production shape for HIGH batch counts, where the
-    * fused path's per-micro-batch corpus re-shingle is the scale
-    * killer: at 100 TB the corpus index is built ONCE per ingest epoch
+    * artifact — the production shape for HIGH batch counts, where
+    * re-running [[incremental]] over corpus ∪ batch re-shingles the
+    * corpus every micro-batch (measured slower at 8 and 16 batches,
+    * BASELINE.md "Round-8"): the corpus index is built ONCE per ingest epoch
     * (three one-shuffle passes) and every arriving batch reads it.
     * Layout under `dir`: `hashes/` (distinct canonical md5),
     * `bands/` (LSH band table (band, bh, doc_id)), `shingles/`
     * ((doc_id, sh) for jaccard verification). All three are per-doc
     * functions of the corpus, so the per-batch results are bit-equal
-    * to the fused computation.
+    * to [[incremental]] over corpus ∪ batch.
     *
     * The three components are written BUCKETED (hashes by `h`, bands
     * by `(band, bh)`, shingles by `doc_id`) as external tables under

@@ -74,14 +74,9 @@ object Scc {
     val spark = edges.sparkSession
     def ckpt(df: DataFrame): DataFrame = graft.util.Scratch.trackCheckpoint(
       df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
-    val debug = sys.env.contains("GRAFT_SCC_DEBUG")
-    val t00 = System.nanoTime()
-    def mark(what: String): Unit = if (debug)
-      System.err.println(f"[scc] ${(System.nanoTime() - t00) / 1e9}%6.2fs $what")
 
     var e = ckpt(edges.where(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct())
-    mark("edges ready")
     val nodeType = e.schema("src").dataType
     val labeled = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var active = ckpt(e.select(col("src").as("v"))
@@ -111,7 +106,6 @@ object Scc {
         val live = ckpt(deg.where(col("o") === 1 && col("i") === 1)
           .select(col("v")))
         val nLive = live.count()
-        mark(s"trim round $r: $nLive live")
         changed = nLive != nActive
         if (changed) {
           labeled += active.join(bc(live, nLive), Seq("v"), "left_anti")
@@ -153,7 +147,6 @@ object Scc {
           .where(col("l") =!= col("l0")).isEmpty
         lbl = upd
       }
-      mark("wcc fixpoint")
       lbl
     }
 
@@ -184,7 +177,6 @@ object Scc {
           .select(col("l"), col("src").as("node"), col("dir"))
         val next = ckpt(fwd.unionByName(bwd).distinct()
           .join(bc(seen, 2 * nActive), Seq("l", "node", "dir"), "left_anti"))
-        mark(s"reach hop $h")
         if (next.isEmpty) exhausted = true
         else {
           frontier = next
@@ -201,7 +193,6 @@ object Scc {
       if (cap <= 0 || nActive > cap) return false
       val nEdges = e.count()
       if (nEdges > cap) return false
-      mark(s"local core: $nActive nodes, $nEdges edges — Tarjan on driver")
       val es = e.collect().map(r => (r.get(0), r.get(1)))
       val rows = tarjanLocal(es).map { case (n0, c0) => Row(n0, c0) }.toSeq
       val sch = StructType(Seq(
@@ -209,7 +200,6 @@ object Scc {
       labeled += spark.createDataFrame(
         spark.sparkContext.parallelize(rows, math.max(1, rows.size / 500000)),
         sch)
-      mark("local core labeled")
       true
     }
 
@@ -232,14 +222,12 @@ object Scc {
               "fired first; this is a bug")
         val lbl = wccLabels()
         val pivots = ckpt(lbl.select(col("l")).distinct())
-        mark(s"round $round pivots ready")
         val both = reachBoth(pivots)
         val scc = ckpt(both.where(col("dir") === "f")
           .select(col("l"), col("node"))
           .join(bc(both.where(col("dir") === "b")
             .select(col("l"), col("node")), nActive),
             Seq("l", "node"), "left_semi"))
-        mark(s"round $round scc intersected")
         labeled += scc.select(col("node"), col("l").as("component"))
         active = ckpt(active.join(scc.select(col("node").as("v")),
           Seq("v"), "left_anti"))

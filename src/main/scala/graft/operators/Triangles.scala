@@ -41,20 +41,6 @@ object Triangles {
       .orElse(sys.env.get("GRAFT_TRI_SHJ_ROWS"))
       .map(_.toLong).getOrElse(100000000L)
 
-  /** Opt-in shuffled-hash hint for the link-prediction center joins
-    * ([[commonNeighbors]] / [[resourceAllocation]]). DEFAULT OFF: the
-    * r17 BenchOne A/B said the hint won (3.60→2.70 min-of-5), but both
-    * the builder's full battery (2.53→2.77) and the driver's
-    * (3.28→3.75) regressed — the isolated-JVM number did not transfer
-    * to in-sequence state, so the hint is reverted and kept behind
-    * this toggle for the same-JVM interleaved A/B (graft.LinkAB). */
-  private[graft] def linkShj: Boolean =
-    sys.props.get("graft.link.shj")
-      .orElse(sys.env.get("GRAFT_LINK_SHJ")).contains("on")
-
-  private def linkHint(df: DataFrame): DataFrame =
-    if (linkShj) df.hint("shuffle_hash") else df
-
   /** Per-node triangle participation counts, top `k` by (count desc,
     * node asc). `edges` must be an undirected edge list with columns
     * (a, b); duplicates and self-loops are removed here. */
@@ -284,7 +270,7 @@ object Triangles {
       .where(col("dn") <= maxCenterDeg)
       .select(col("v"), col("n"))
     val pairs = centers.select(col("n"), col("v").as("pa"))
-      .join(linkHint(centers.select(col("n"), col("v").as("pb"))), Seq("n"))
+      .join(centers.select(col("n"), col("v").as("pb")), Seq("n"))
       .where(col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("common"))
       .where(col("common") >= minCommon)
@@ -327,7 +313,7 @@ object Triangles {
       .where(col("dn") <= maxCenterDeg)
       .select(col("v"), col("n"), expr("1000000L div dn").as("w"))
     centers.select(col("n"), col("v").as("pa"), col("w"))
-      .join(linkHint(centers.select(col("n"), col("v").as("pb"))), Seq("n"))
+      .join(centers.select(col("n"), col("v").as("pb")), Seq("n"))
       .where(col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("common"), sum(col("w")).as("ra_micro"))

@@ -44,7 +44,7 @@ object ExtQueries {
     * landed-resource `get` entries. */
   private[queries] def landedRoundTrip(prefix: String, srcFile: String)
                                       (write: String => Unit): String = {
-    val dir = sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+    val dir = Graft.eavRoot +
       "/" + prefix + "_" + graft.util.Fingerprint.of(srcFile)
     if (!new java.io.File(dir + "/_SUCCESS").exists()) {
       val tmp = dir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
@@ -2036,12 +2036,11 @@ object ExtQueries {
     "stream_ingest_commits" -> ((s, d) => {
       val ctx = Graft.ctx(s, d)
       val preds = Seq("tpch:o_custkey", "tpch:o_totalprice")
-      val cacheRoot = sys.env.getOrElse("GRAFT_EAV_CACHE",
-        "/root/repo/target/eav")
+      val root = Graft.eavRoot
       val fp = graft.util.Fingerprint.of(d + "/orders.parquet")
-      val storeDir = new java.io.File(s"$cacheRoot/ingest_store_$fp")
+      val storeDir = new java.io.File(s"$root/ingest_store_$fp")
       if (!storeDir.exists()) {
-        val stageDir = new java.io.File(s"$cacheRoot/ingest_stage_$fp")
+        val stageDir = new java.io.File(s"$root/ingest_stage_$fp")
         ctx.triples.filter(col("p").isin(preds: _*))
           .repartition(3) // three files → three micro-batches/commits
           .write.mode("overwrite").parquet(stageDir.getAbsolutePath)
@@ -2073,12 +2072,11 @@ object ExtQueries {
     // firehose ingests at text-split parallelism with layered-commit
     // durability per trigger.
     "stream_nquads_ingest" -> ((s, d) => {
-      val cacheRoot = sys.env.getOrElse("GRAFT_EAV_CACHE",
-        "/root/repo/target/eav")
+      val root = Graft.eavRoot
       val fp = graft.util.Fingerprint.of(d + "/nation.parquet")
-      val storeDir = new java.io.File(s"$cacheRoot/nq_ingest_store_$fp")
+      val storeDir = new java.io.File(s"$root/nq_ingest_store_$fp")
       if (!storeDir.exists()) {
-        val stageDir = new java.io.File(s"$cacheRoot/nq_ingest_stage_$fp")
+        val stageDir = new java.io.File(s"$root/nq_ingest_stage_$fp")
         val quads = ntFixture(s, d).withColumn("g",
           when(col("p").isin("ex:key", "ex:even"), lit("g:audit"))
             .otherwise(col("g")))
@@ -3239,7 +3237,8 @@ object ExtQueries {
     // animated-GIF check: frame count, dims, frame-0 delay and the
     // full per-pixel fold (solid frames × closed-form colors) must
     // equal the generator's closed form — a palette-lossy or faked
-    // frame decode diverges in px_sum
+    // frame decode diverges in px_sum (cast: DuckDB types the SUM as
+    // HUGEINT, the engine writes BIGINT)
     "mm_decode_gif_anim" ->
       """WITH fr AS (SELECT doc_id, f FROM documents,
         |   (SELECT unnest(range(0, 4)) AS f) WHERE f < 1 + doc_id % 4),
@@ -3250,7 +3249,7 @@ object ExtQueries {
         | SELECT d.doc_id, 1 + d.doc_id % 4 AS n_frames,
         |  8 + d.doc_id % 8 AS width, 8 + d.doc_id % 4 AS height,
         |  4 + d.doc_id % 6 AS delay_cs, 1 + d.doc_id % 4 AS frames_decoded,
-        |  (8 + d.doc_id % 8) * (8 + d.doc_id % 4) * px.csum AS px_sum,
+        |  CAST((8 + d.doc_id % 8) * (8 + d.doc_id % 4) * px.csum AS BIGINT) AS px_sum,
         |  'image/gif-anim' AS format
         | FROM documents d JOIN px ON d.doc_id = px.doc_id""".stripMargin,
 
@@ -3267,7 +3266,7 @@ object ExtQueries {
         | SELECT d.doc_id, 1 + d.doc_id % 3 AS n_pages,
         |  6 + d.doc_id % 6 AS width, 6 + d.doc_id % 3 AS height,
         |  1 + d.doc_id % 3 AS pages_decoded,
-        |  (6 + d.doc_id % 6) * (6 + d.doc_id % 3) * px.csum AS px_sum,
+        |  CAST((6 + d.doc_id % 6) * (6 + d.doc_id % 3) * px.csum AS BIGINT) AS px_sum,
         |  'image/tiff' AS format
         | FROM documents d JOIN px ON d.doc_id = px.doc_id""".stripMargin,
 

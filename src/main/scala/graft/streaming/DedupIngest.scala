@@ -34,34 +34,18 @@ object DedupIngest {
   private def inputFingerprint(path: String): String =
     graft.util.Fingerprint.of(path)
 
-  /** Arrival batch count and dedup strategy are A/B levers (sys.props
-    * first so a warm sbt shell can flip them without a new JVM):
-    * `graft.incr.batches` / GRAFT_INCR_BATCHES (default 2 — the
-    * driver-gated replay), and `graft.incr.dedup` / GRAFT_INCR_DEDUP
-    * = `fused` to re-run [[graft.llm.Dedup.incremental]] over
-    * corpus ∪ batch per micro-batch instead of the default prebuilt
-    * corpus-index path. Output content is identical on every setting:
-    * arrivals are only ever compared against the corpus, so the batch
-    * partitioning and the index-vs-fused choice cannot change any row. */
-  private def knob(prop: String, env: String): Option[String] =
-    sys.props.get(prop).orElse(sys.env.get(env))
-
   def streamingIncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav")
-    val nBatches = knob("graft.incr.batches", "GRAFT_INCR_BATCHES")
-      .map(_.toInt).getOrElse(2)
-    val fused = knob("graft.incr.dedup", "GRAFT_INCR_DEDUP").contains("fused")
-    // stage arrivals as `nBatches` parquet files so AvailableNow +
+    val root = graft.Graft.eavRoot
+    // stage arrivals as two parquet files so AvailableNow +
     // maxFilesPerTrigger=1 yields a genuine multi-batch replay; keyed
     // on the SOURCE fingerprint, not just the path
     val srcFp = inputFingerprint(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(root +
-      "/stream_docs_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_" + srcFp + (if (nBatches != 2) s"_b$nBatches" else ""))
+      "/stream_docs_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + srcFp)
     if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
       spark.read.parquet(s"$sfDir/documents.parquet")
         .where(pmod(col("doc_id"), lit(10L)) < 2)
-        .repartition(nBatches)
+        .repartition(2)
         .write.mode("overwrite").parquet(stageDir.getAbsolutePath)
     }
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -71,7 +55,7 @@ object DedupIngest {
     // by every micro-batch (the production high-batch-count shape)
     val indexDir = new java.io.File(root +
       "/incrindex_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + srcFp)
-    if (!fused && !new java.io.File(indexDir, "_INDEX_SUCCESS").exists())
+    if (!new java.io.File(indexDir, "_INDEX_SUCCESS").exists())
       graft.llm.Dedup.buildCorpusIndex(corpus, indexDir.getAbsolutePath)
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val outDir = new java.io.File(root,
@@ -88,14 +72,9 @@ object DedupIngest {
       .parquet(stageDir.getAbsolutePath)
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        (if (fused)
-          Dedup.incremental(
-            corpus.union(batch.select(col("doc_id"), col("text"))),
-            pmod(col("doc_id"), lit(10L)) < 2)
-        else
-          Dedup.incrementalFromIndex(
-            batch.select(col("doc_id"), col("text")),
-            indexDir.getAbsolutePath))
+        Dedup.incrementalFromIndex(
+          batch.select(col("doc_id"), col("text")),
+          indexDir.getAbsolutePath)
           .write.mode("append").parquet(outDir.getAbsolutePath)
       }
       .trigger(Trigger.AvailableNow())
@@ -114,7 +93,7 @@ object DedupIngest {
     * the same contract as [[streamingIncrementalDedup]]. */
   def streamingSubstrSpans(spark: SparkSession, sfDir: String,
                            L: Int = 8): DataFrame = {
-    val root = sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav")
+    val root = graft.Graft.eavRoot
     val srcFp = inputFingerprint(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(root +
       "/stream_docs_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + srcFp)

@@ -15,23 +15,16 @@ object Events {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** State-store provider for the stateful streaming queries. RocksDB
-    * is the default: the HDFS-backed provider keeps every live key in
-    * JVM-heap maps — at 100× the per-executor state of the user-stats /
-    * stream-join queries that heap IS the wall — while RocksDB holds
-    * state off-heap in native storage with bounded memory and
-    * incremental snapshots. Oracles are provider-independent (verified
-    * green under both); BASELINE.md carries the sf0.1 A/B timings.
-    * GRAFT_STATE_STORE=hdfs restores the legacy provider. */
-  private[streaming] def applyStateStore(spark: SparkSession): Unit = {
-    val pkg = "org.apache.spark.sql.execution.streaming.state."
-    val cls = sys.props.get("graft.state.store")
-      .orElse(sys.env.get("GRAFT_STATE_STORE")).getOrElse("rocksdb") match {
-      case "hdfs" => pkg + "HDFSBackedStateStoreProvider"
-      case _ => pkg + "RocksDBStateStoreProvider"
-    }
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-  }
+  /** State-store provider for the stateful streaming queries: RocksDB.
+    * The HDFS-backed provider keeps every live key in JVM-heap maps —
+    * at 100× the per-executor state of the user-stats / stream-join
+    * queries that heap IS the wall — while RocksDB holds state off-heap
+    * in native storage with bounded memory and incremental snapshots.
+    * Oracles are provider-independent (verified green under both);
+    * BASELINE.md carries the sf0.1 A/B timings. */
+  private[streaming] def applyStateStore(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Run a finite replay of a streaming frame into a memory sink and
     * return the sink table. Stateful exchanges inherit
@@ -78,7 +71,7 @@ object Events {
     // the same part count would otherwise silently replay stale data
     val srcFile = new java.io.File(s"$sfDir/events.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/stream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     // source may be a single parquet file (driver testdata) or a
@@ -635,7 +628,7 @@ object Events {
     applyStateStore(spark)
     val srcFile = new java.io.File(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/mmstage_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
@@ -666,7 +659,7 @@ object Events {
     applyStateStore(spark)
     val srcFile = new java.io.File(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/docstream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     val parts: Seq[java.io.File] =
@@ -699,7 +692,7 @@ object Events {
     applyStateStore(spark)
     val srcFile = new java.io.File(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/docstream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     val parts: Seq[java.io.File] =
@@ -737,7 +730,7 @@ object Events {
     applyStateStore(spark)
     val srcFile = new java.io.File(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/docstream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     val parts: Seq[java.io.File] =
@@ -784,7 +777,7 @@ object Events {
     applyStateStore(spark)
     val srcFile = new java.io.File(s"$sfDir/documents.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/docstream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     val parts: Seq[java.io.File] =
@@ -822,7 +815,7 @@ object Events {
   private def stagedEmbStream(spark: SparkSession, sfDir: String): DataFrame = {
     val srcFile = new java.io.File(s"$sfDir/embeddings.parquet")
     val stageDir = new java.io.File(
-      sys.env.getOrElse("GRAFT_EAV_CACHE", "/root/repo/target/eav") +
+      graft.Graft.eavRoot +
         "/embstream_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
         "_" + graft.util.Fingerprint.of(srcFile.getPath))
     val parts: Seq[java.io.File] =

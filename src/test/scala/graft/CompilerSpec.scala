@@ -255,20 +255,6 @@ class CompilerSpec extends AnyFunSuite {
     assert(res.length == 1)
   }
 
-  test("star fusion preserves solutions (functional predicates)") {
-    val g2 = triples(
-      (":a", "name", "alice"), (":a", "age", 30), (":a", "city", "rome"),
-      (":b", "name", "bob"), (":b", "age", 40))
-    val q = And(Seq(
-      TriplePat(V("X"), Node("name"), V("N")),
-      TriplePat(V("X"), Node("age"), V("A")),
-      TriplePat(V("X"), Node("city"), V("C"))))
-    val plain = Compiler.run(q)(ctxOf(g2)).select("X", "N", "A", "C").collect().toSet
-    val fusedCtx = ctxOf(g2).copy(functionalPreds = Set("name", "age", "city"))
-    val fused = Compiler.run(q)(fusedCtx).select("X", "N", "A", "C").collect().toSet
-    assert(plain == fused && fused.size == 1) // only :a has all three
-  }
-
   test("group_by + sum over grouped list") {
     val q = And(Seq(
       GroupBy(Seq("A"), Seq("P"),

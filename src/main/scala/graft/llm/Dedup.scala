@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
@@ -353,13 +353,11 @@ object Dedup {
   }
 
   /** Per-document near-dup CLUSTER assignment: connected components
-    * over the verified LSH pair graph by iterative min-label
-    * propagation — each doc's cluster id is the smallest doc_id
-    * reachable through the near-dup relation (singletons label
-    * themselves; keep policy = `doc_id == cluster`). A cleaning
-    * pipeline consumes THIS, not pairs. Semi-naive: each round is one
-    * equi-join + min-aggregate over the (tiny) edge list; rounds ∝
-    * cluster diameter, work ∝ |edges| — never all-pairs. */
+    * over the verified LSH pair graph ([[clustersFromPairs]]) — each
+    * doc's cluster id is the smallest doc_id reachable through the
+    * near-dup relation (singletons label themselves; keep policy =
+    * `doc_id == cluster`). A cleaning pipeline consumes THIS, not
+    * pairs. Work ∝ |edges| — never all-pairs. */
   def nearDupClusters(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     clustersFromPairs(docs.select(col("doc_id")),
       minhashNearDups(docs, threshold).select(col("da"), col("db")))
@@ -367,9 +365,68 @@ object Dedup {
   /** Generic min-label connected components over any `(da, db)` pair
     * relation — also serves embedding near-dups
     * (`clustersFromPairs(emb.select(col("vec_id").as("doc_id")),
-    * embeddingLshDups(emb).select(col("ia").as("da"), col("ib").as("db")))`). */
+    * embeddingLshDups(emb).select(col("ia").as("da"), col("ib").as("db")))`).
+    *
+    * One `(doc_id, cluster)` row per `ids` row (duplicate ids stay
+    * duplicated): `cluster` is the least id of the component under
+    * Spark's ordering, a pair links two nodes only when both endpoints
+    * are in `ids`, and a null id gets a null cluster.
+    *
+    * String or Long ids whose ids and pairs fit the driver budget
+    * ([[graft.util.LocalFinish]]) are collected once and finished by
+    * union-find on the driver, at any component depth. Otherwise
+    * min-label propagation runs one round per hop of component
+    * diameter and raises after `maxRounds` rounds. */
   def clustersFromPairs(ids: DataFrame, pairs: DataFrame,
                         maxRounds: Int = 64): DataFrame = {
+    val idCol = ids.select(col("doc_id"))
+    val pairCols = pairs.select(col("da"), col("db"))
+    val idField = idCol.schema.head
+    val localType = (idField.dataType == StringType || idField.dataType == LongType) &&
+      pairCols.schema.forall(_.dataType == idField.dataType)
+    (if (localType) graft.util.LocalFinish.collect(idCol, pairCols) else None) match {
+      case Some(Seq(idRows, pairRows)) =>
+        val spark = ids.sparkSession
+        val out = localClusters(idRows.map(_.get(0)),
+          pairRows.map(r => (r.get(0), r.get(1))))
+        spark.createDataFrame(java.util.Arrays.asList(out: _*),
+          StructType(Seq(idField, idField.copy(name = "cluster"))))
+      case _ => distributedClusters(idCol, pairCols, maxRounds)
+    }
+  }
+
+  /** [[clustersFromPairs]] on collected ids and pairs: union-find
+    * whose every root is the least member of its set. */
+  private def localClusters(ids: Array[Any], pairs: Array[(Any, Any)])
+      : Array[Row] = {
+    val index = new java.util.HashMap[Any, Integer]()
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
+    for (v <- ids if v != null && !index.containsKey(v)) {
+      index.put(v, nodes.length); nodes += v
+    }
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    for ((a, b) <- pairs) {
+      val (ia, ib) = (index.get(a), index.get(b))
+      if (ia != null && ib != null) {
+        val (ra, rb) = (find(ia), find(ib))
+        if (ra != rb) {
+          if (graft.util.LocalFinish.compare(nodes(ra), nodes(rb)) < 0) parent(rb) = ra
+          else parent(ra) = rb
+        }
+      }
+    }
+    ids.map(v => if (v == null) Row(null, null) else Row(v, nodes(find(index.get(v)))))
+  }
+
+  private def distributedClusters(ids: DataFrame, pairs: DataFrame,
+                                  maxRounds: Int): DataFrame = {
     // every checkpoint is Scratch-tracked (released at the harness's
     // drain), and each round eagerly frees the PREVIOUS round's label
     // blocks — rounds ∝ component diameter, so without the release a
@@ -382,10 +439,9 @@ object Dedup {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           val _ = l.rdd.unpersist(false)
       }
-    val edges = cp(pairs.select(col("da"), col("db"))
+    val edges = cp(pairs
       .unionByName(pairs.select(col("db").as("da"), col("da").as("db"))))
-    var labels = cp(ids.select(col("doc_id"))
-      .withColumn("cluster", col("doc_id")))
+    var labels = cp(ids.withColumn("cluster", col("doc_id")))
     // Broadcast hint for the V-sized label/neighbor-min frames: below
     // the cap (same knob family as the path engine's broadcast rows)
     // each round's edges ⋈ labels probes the checkpointed edge blocks

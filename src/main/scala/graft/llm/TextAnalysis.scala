@@ -300,11 +300,13 @@ object TextAnalysis {
     * Scale shape: the corpus collapses to a `(word, count)` VOCABULARY
     * table first (one shuffle, rows ∝ distinct word types — Zipf-small
     * relative to the corpus), and every round then works on that
-    * table: pair counting is one aggregation over vocab rows, the
-    * argmax is a 1-row driver collect (bounded by construction), and
-    * the merge application is a narrow fold map. Per-round cost is
-    * independent of corpus size — the 100 TB corpus is touched exactly
-    * once. Words are lowercase letter runs with a trailing `_`
+    * table ([[mergeLoop]]): within the driver budget the vocabulary is
+    * collected once and the rounds run in memory; above it each round
+    * is one aggregation over vocab rows, a 1-row argmax collect and a
+    * narrow fold map. Per-round cost is independent of corpus size —
+    * the 100 TB corpus is touched exactly once (as in Sennrich's and
+    * the Hugging Face trainers, which keep the word-count vocabulary
+    * in memory). Words are lowercase letter runs with a trailing `_`
     * end-of-word marker symbol, so every symbol stays in `[a-z_]+`
     * (delimiter-safe for the oracle's string-state fold replay).
     * Ties break deterministically: highest freq, then (lhs, rhs)
@@ -369,11 +371,74 @@ object TextAnalysis {
 
   /** The frequency-argmax merge loop over any (syms, cnt) initial
     * vocabulary — shared by character BPE ([[bpeVocab0]]) and
-    * byte-level BPE ([[byteBpeVocab0]]); only v0 differs. */
-  private def mergeLoop(vocab0: DataFrame, k: Int, top: Int)
+    * byte-level BPE ([[byteBpeVocab0]]); only v0 differs. A vocabulary
+    * within the driver budget ([[graft.util.LocalFinish]]) is collected
+    * once and every round runs in memory; a larger one keeps the
+    * distributed loop, one aggregation and argmax collect per round. */
+  private[graft] def mergeLoop(vocab0: DataFrame, k: Int, top: Int)
       : Seq[(Long, Long, String, String, Long)] = {
-    var vocab = vocab0.select(col("syms"), col("cnt"))
-    vocab = graft.util.Scratch.trackCheckpoint(vocab.localCheckpoint(true))
+    val vocab = vocab0.select(col("syms"), col("cnt"))
+    graft.util.LocalFinish.collect(vocab) match {
+      case Some(Seq(rows)) => localMergeLoop(
+        rows.map(r => (r.getSeq[String](0).toArray, r.getLong(1))), k, top)
+      case _ => distributedMergeLoop(vocab, k, top)
+    }
+  }
+
+  /** [[mergeLoop]] over a collected vocabulary: per round, the pair
+    * counts of [[bpePairCounts]], the argmax in Spark's order (freq
+    * desc, then `l`, then `r` as UTF-8 bytes) and [[applyMerge]]'s
+    * greedy left-to-right merge. */
+  private def localMergeLoop(vocab0: Array[(Array[String], Long)], k: Int,
+                             top: Int): Seq[(Long, Long, String, String, Long)] = {
+    import graft.util.LocalFinish.compare
+    val order: Ordering[((String, String), Long)] = (a, b) => {
+      val byFreq = java.lang.Long.compare(b._2, a._2)
+      if (byFreq != 0) byFreq
+      else {
+        val byL = compare(a._1._1, b._1._1)
+        if (byL != 0) byL else compare(a._1._2, b._1._2)
+      }
+    }
+    var vocab = vocab0
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, String, Long)]
+    var round = 0
+    var done = false
+    while (!done && round < k) {
+      round += 1
+      val freq = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, cnt) <- vocab; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        freq(p) = freq.getOrElse(p, 0L) + cnt
+      }
+      if (freq.isEmpty) done = true
+      else {
+        val best = freq.toArray.sorted(order).take(top)
+        best.zipWithIndex.foreach { case (((l, r), f), j) =>
+          out += ((round.toLong, (j + 1).toLong, l, r, f))
+        }
+        val ((l, r), _) = best(0)
+        if (round < k) vocab = vocab.map { case (syms, cnt) => (mergeSyms(syms, l, r), cnt) }
+      }
+    }
+    out.toSeq
+  }
+
+  /** [[applyMerge]] on one collected symbol array. */
+  private def mergeSyms(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var carry: String = null
+    for (x <- syms) {
+      if (carry == l && x == r) { out += l + r; carry = null }
+      else { if (carry != null) out += carry; carry = x }
+    }
+    if (carry != null) out += carry
+    out.result()
+  }
+
+  private def distributedMergeLoop(vocab0: DataFrame, k: Int, top: Int)
+      : Seq[(Long, Long, String, String, Long)] = {
+    var vocab = graft.util.Scratch.trackCheckpoint(vocab0.localCheckpoint(true))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, String, Long)]
     var round = 0
     var done = false

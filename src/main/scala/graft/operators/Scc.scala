@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import graft.util.LocalFinish
 
 /** Strongly connected components of a directed graph, labeled by each
   * component's LEAST member id — the deterministic analogue of
@@ -23,12 +24,12 @@ import org.apache.spark.storage.StorageLevel
   *     FW-BW viable on graphs whose SCC count is large: the pivot loop
   *     only ever runs on the cyclic core.
   *  2. LOCAL-CORE FAST PATH: once the surviving cyclic core's edge
-  *     list fits under `graft.scc.localCore` edges (default 2M, "0"
-  *     disables), collect it and finish with one driver-side iterative
-  *     Tarjan pass — O(V+E), a single bounded collect (the catalog-
-  *     collect discipline: the bound is the config cap, not hope).
-  *     Trim stays fully distributed, so at 100 TB the collect is the
-  *     cyclic core, not the graph; cores past the cap take path 3.
+  *     list, counted, fits the driver budget ([[graft.util.LocalFinish]]:
+  *     rows × row size against a fixed share of the driver heap),
+  *     collect it and finish with one driver-side iterative Tarjan
+  *     pass — O(V+E), a single bounded collect. Trim stays fully
+  *     distributed, so at 100 TB the collect is the cyclic core, not
+  *     the graph; cores past the budget take path 3.
   *  3. MULTI-PIVOT FW-BW DESCENT: one pivot per WEAKLY-connected
   *     component of the surviving core (min-label WCC), so pivots are
   *     provably in distinct SCCs and ALL forward/backward searches
@@ -57,14 +58,9 @@ import org.apache.spark.storage.StorageLevel
   * anything larger than |V| + |E|, frontiers shrink monotonically,
   * and the surviving edge list is re-checkpointed serialized per
   * round so peak block residency is one edge list regardless of
-  * round count. The only collect is the cap-gated core.
+  * round count. The only collect is the budget-gated core.
   */
 object Scc {
-
-  private def localCoreCap: Long =
-    sys.props.get("graft.scc.localCore")
-      .orElse(sys.env.get("GRAFT_SCC_LOCAL_CORE"))
-      .map(_.toLong).getOrElse(2000000L)
 
   /** (node, component) for every endpoint of `edges` — `component` is
     * the least node id of the member's SCC. `edges` columns: src, dst;
@@ -186,13 +182,13 @@ object Scc {
       seen
     }
 
-    // the cap-gated driver finish: collect the core's edge list and
-    // run iterative Tarjan. Returns true when it ran (core under cap).
+    // the budget-gated driver finish: collect the core's edge list and
+    // run iterative Tarjan. Returns true when it ran (core in budget).
+    // Every core node has an out-edge, so a core of more nodes than the
+    // budget's edge rows cannot fit and skips the edge count.
     def tryLocalCore(): Boolean = {
-      val cap = localCoreCap
-      if (cap <= 0 || nActive > cap) return false
-      val nEdges = e.count()
-      if (nEdges > cap) return false
+      if (!LocalFinish.fits(e.schema, nActive) ||
+        !LocalFinish.fits(e.schema, e.count())) return false
       val es = e.collect().map(r => (r.get(0), r.get(1)))
       val rows = tarjanLocal(es).map { case (n0, c0) => Row(n0, c0) }.toSeq
       val sch = StructType(Seq(
@@ -270,9 +266,10 @@ object Scc {
   }
 
   /** Iterative (explicit-stack) Tarjan over a collected core: O(V+E),
-    * one pass, labels = least member per SCC. Node ids compare by
-    * their natural `Comparable` order — the same order Spark's `min`
-    * gives the distributed path, so both paths agree row for row. */
+    * one pass, labels = least member per SCC. Node ids compare in
+    * Spark's order ([[LocalFinish.compare]]: strings as UTF-8 bytes) —
+    * the order Spark's `min` gives the distributed path, so both paths
+    * agree row for row. */
   private[graft] def tarjanLocal(
       edges: Array[(Any, Any)]): Iterator[(Any, Any)] = {
     val idx = new java.util.HashMap[Any, Integer]()
@@ -350,8 +347,7 @@ object Scc {
     while (i < n) {
       val c = comp(i)
       val v = nodes(i)
-      if (minMember(c) == null ||
-        v.asInstanceOf[Comparable[Any]].compareTo(minMember(c)) < 0)
+      if (minMember(c) == null || LocalFinish.compare(v, minMember(c)) < 0)
         minMember(c) = v
       i += 1
     }

@@ -1137,10 +1137,10 @@ object ExtQueries {
           t(s, d, "lineitem"), "l_orderkey", "l_partkey"), k = 60)),
 
     // weakly-connected components over the FK entity graph
-    // (customer/supplier→nation→region): min-label propagation
-    // (Dedup.clustersFromPairs — the same engine that labels near-dup
-    // clusters), components labeled by their least member IRI. The FK
-    // shape gives a closed-form oracle: one component per region.
+    // (customer/supplier→nation→region): Dedup.clustersFromPairs, the
+    // same engine that labels near-dup clusters, with components
+    // labeled by their least member IRI. The FK shape gives a
+    // closed-form oracle: one component per region.
     "graph_wcc" -> ((s, d) => {
       val ctx = Graft.ctx(s, d)
       val fks = Seq("tpch:c_nationkey", "tpch:n_regionkey", "tpch:s_nationkey")

@@ -78,16 +78,20 @@ class LlmSpec extends AnyFunSuite {
     import spark.implicits._
     // chain 1-2-3-4-5-6 has diameter 5: min-label propagation moves one
     // hop per round, so maxRounds=1 CANNOT converge — must raise, never
-    // return labels that disagree with connected components
+    // return labels that disagree with connected components. The
+    // driver-side union-find has no round limit, so the distributed
+    // branch is forced.
     val ids = (1L to 6L).toDF("doc_id")
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("da", "db")
-    val e = intercept[IllegalStateException] {
-      Dedup.clustersFromPairs(ids, pairs, maxRounds = 1).collect()
+    graft.util.LocalFinish.forcingDistributed {
+      val e = intercept[IllegalStateException] {
+        Dedup.clustersFromPairs(ids, pairs, maxRounds = 1).collect()
+      }
+      assert(e.getMessage.contains("did not converge"))
+      // same input with enough rounds: one cluster labeled by the min id
+      val ok = Dedup.clustersFromPairs(ids, pairs, maxRounds = 8).collect()
+      assert(ok.forall(_.getLong(1) == 1L))
     }
-    assert(e.getMessage.contains("did not converge"))
-    // same input with enough rounds: one cluster labeled by the min id
-    val ok = Dedup.clustersFromPairs(ids, pairs, maxRounds = 8).collect()
-    assert(ok.forall(_.getLong(1) == 1L))
   }
 
   test("corpus-index incremental dedup is row-equal to the fused path") {

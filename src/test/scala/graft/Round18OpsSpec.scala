@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, GetStructField}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -27,10 +27,15 @@ class Round18OpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Option(r.getAs[Row](v)).map(_.getAs[String]("iri")).orNull
   private def strOf(r: Row, v: String): String =
     Option(r.getAs[Row](v)).map(_.getAs[String]("str")).orNull
-  private def plan(q: Woql): SparkPlan = {
-    val df = Compiler.run(q)
-    df.count() // settle AQE so the executed plan is final
-    df.queryExecution.executedPlan
+  private def plan(q: Woql): SparkPlan = finalPlan(Compiler.run(q))
+
+  /** The plan `df` ran with: collecting THIS Dataset makes its adaptive
+    * plan final (a `count()` runs a new Dataset and leaves it initial). */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(!p.toString.contains("isFinalPlan=false"), s"initial adaptive plan:\n$p")
+    p
   }
 
   /** Keys with the optimizer's helper columns (`_extract_iri`, `_w0`)
@@ -131,8 +136,7 @@ class Round18OpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val rows = df.collect().map(r => (iriOf(r, "X"), iriOf(r, "W")))
     // exactly one solution per frame row, and the least W per X
     assert(rows.toSet == Set((":a", ":b"), (":b", ":c"), (":c", ":a")))
-    df.count()
-    val p = df.queryExecution.executedPlan
+    val p = finalPlan(df)
     val partitionKeys = resolved(p,
       collect(p) { case w: WindowExec => w.partitionSpec }.flatten)
     assert(narrowOn(partitionKeys, "X"),

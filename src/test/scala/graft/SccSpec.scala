@@ -20,15 +20,8 @@ class SccSpec extends AnyFunSuite {
   /** Run with the local-core Tarjan fast path disabled — forces the
     * distributed FW-BW descent arm. */
   private def runDistributed(edges: Seq[(String, String)])
-      : Map[String, String] = {
-    val old = sys.props.get("graft.scc.localCore")
-    sys.props("graft.scc.localCore") = "0"
-    try runSeq(edges)
-    finally old match {
-      case Some(v) => sys.props("graft.scc.localCore") = v
-      case None => sys.props.remove("graft.scc.localCore")
-    }
-  }
+      : Map[String, String] =
+    graft.util.LocalFinish.forcingDistributed(runSeq(edges))
 
   test("two SCCs joined by a DAG bridge, hand-traced") {
     // cycle 1: a→b→c→a;  bridge: c→x→p;  cycle 2: p→q→p;  tail: q→z
@@ -90,7 +83,7 @@ class SccSpec extends AnyFunSuite {
     val edges = bipartiteFamily(6) ++ Seq(
       "a" -> "b", "b" -> "c", "c" -> "a", "c" -> "x", "x" -> "p",
       "p" -> "q", "q" -> "p", "q" -> "l01a", "r03b" -> "z")
-    val local = runSeq(edges) // default cap ≫ fixture: Tarjan path
+    val local = runSeq(edges) // fixture ≪ driver budget: Tarjan path
     val dist = runDistributed(edges)
     assert(local == dist)
     assert(local("b") == "a" && local("q") == "p" && local("x") == "x")

@@ -241,12 +241,21 @@ object Documents {
     * are references, never owned content, so no framing option
     * inlines a foreign document. */
   def read(graph: DataFrame, id: String, unfold: Boolean = true,
-           depth: Int = Int.MaxValue): JValue = {
-    val maxDepth = if (unfold) depth else 0
-    val triples = graph
-      .filter(col("s") === id || col("s").startsWith(id + "/"))
+           depth: Int = Int.MaxValue): JValue =
+    fromRows(graph, id, subjectRows(graph, id), unfold, depth)
+
+  /** The rows [[read]] assembles document `id` from, in ONE collect:
+    * `(s, p, o_kind, o_iri, o_typ, o_str, o_dbl, o_lng, o_bool)` of every
+    * triple whose subject is `id` or lies under `id/`. */
+  def subjectRows(graph: DataFrame, id: String): Array[Row] =
+    graph.filter(col("s") === id || col("s").startsWith(id + "/"))
       .select("s", "p", "o_kind", "o_iri", "o_typ", "o_str", "o_dbl", "o_lng", "o_bool")
       .collect()
+
+  /** [[read]] from rows [[subjectRows]] already collected. */
+  def fromRows(graph: DataFrame, id: String, triples: Array[Row], unfold: Boolean,
+               depth: Int): JValue = {
+    val maxDepth = if (unfold) depth else 0
     val have = triples.map(_.getString(0)).toSet
     // list heads: IRI field values that carry rdf:first — in-prefix
     // cells are already collected; out-of-prefix targets (turtle blank

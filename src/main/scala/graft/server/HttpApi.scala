@@ -246,21 +246,43 @@ object HttpApi {
 
     // document JSON with the reference's @id/@type envelope
     // ([ref:core/document/json.pl] json document shape) — metadata
-    // first, fields after, like the reference's document responses
+    // first, fields after, like the reference's document responses.
+    // The one subject-filtered collect the body is assembled from also
+    // answers existence (a 400 when `id` has no triple of its own) and
+    // @type, so a document costs one scan of `g`.
     def docJsonWithMeta(g: org.apache.spark.sql.DataFrame, id: String,
                         unfold: Boolean = true,
                         depth: Int = Int.MaxValue): String = {
-      import org.apache.spark.sql.functions.col
-      val ty = g.filter(col("s") === id && col("p") === "rdf:type" &&
-          col("o_kind") === "i").select("o_iri").limit(1)
-        .collect().headOption.map(_.getString(0))
-      val body = graft.docs.Documents.read(g, id, unfold, depth) match {
+      val rows = graft.docs.Documents.subjectRows(g, id)
+      require(rows.exists(_.getString(0) == id), s"document not found: $id")
+      val ty = rows.collectFirst { case r if r.getString(0) == id &&
+        r.getString(1) == "rdf:type" && r.getString(2) == "i" => r.getString(3) }
+      val body = graft.docs.Documents.fromRows(g, id, rows, unfold, depth) match {
         case JObject(fields) => fields
         case other => List("value" -> other)
       }
       JsonMethods.compact(JsonMethods.render(JObject(
         ("@id" -> (JString(id): JValue)) ::
           ty.map(t => "@type" -> (JString(t): JValue)).toList ::: body)))
+    }
+
+    // document `id`'s subgraph in `g`, staged as the removes of a
+    // commit (a 400 when `id` has no triple of its own): ONE bounded
+    // collect answers existence and becomes a driver-local frame, so the
+    // commit's content hash and its layer write read those rows instead
+    // of scanning `g` again. Over the LocalFinish budget: the lazy frame.
+    def stagedRemoves(g: DataFrame, id: String): DataFrame = {
+      import org.apache.spark.sql.functions.col
+      val doomed = graft.docs.Documents.delete(g, id)
+      graft.util.LocalFinish.collect(doomed) match {
+        case Some(Seq(rows)) =>
+          require(rows.exists(_.getAs[String]("s") == id), s"document not found: $id")
+          // one partition: the removes layer is one file, not one per core
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), doomed.schema).coalesce(1)
+        case _ =>
+          require(!doomed.filter(col("s") === id).isEmpty, s"document not found: $id")
+          doomed
+      }
     }
 
     srv.createContext("/api/document", route { ex =>
@@ -278,8 +300,6 @@ object HttpApi {
               case (_, Some(b)) => store.materializeBranch(b)
               case _ => defaultGraph
             }
-            require(!g.filter(org.apache.spark.sql.functions
-              .col("s") === id).isEmpty, s"document not found: $id")
             // JSON-LD framing ([ref:core/query/frame.pl]):
             // ?unfold=false folds subdocuments to their @id strings,
             // ?depth=N unfolds only N levels below the root
@@ -355,11 +375,10 @@ object HttpApi {
           val docType = param(ex, "type")
             .getOrElse(sys.error("type parameter required"))
           val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-          val g = defaultGraph
-          require(!g.filter(org.apache.spark.sql.functions
-            .col("s") === id).isEmpty, s"document not found: $id")
+          // staging over the removes' own rows: the same subgraph,
+          // with no second scan of the graph
           val (adds, removes) = graft.storage.Updates.stageDocUpdate(
-            g, id, body, docType)
+            stagedRemoves(defaultGraph, id), id, body, docType)
           val commitId = store.commit("main", adds, removes, s"replace $id")
           ok(JObject("api:status" -> JString("api:success"),
             "commit" -> JString(commitId), "id" -> JString(id)))
@@ -368,12 +387,9 @@ object HttpApi {
         // protocol — subdocuments go with their root
         case "DELETE" =>
           val id = param(ex, "id").getOrElse(sys.error("id parameter required"))
-          val g = defaultGraph
-          val doomed = graft.docs.Documents.delete(g, id)
-          require(!doomed.isEmpty, s"document not found: $id")
           val commitId = store.commit("main",
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-              graft.storage.Eav.schema), doomed, s"delete $id")
+              graft.storage.Eav.schema), stagedRemoves(defaultGraph, id), s"delete $id")
           ok(JObject("api:status" -> JString("api:success"),
             "commit" -> JString(commitId), "deleted" -> JString(id)))
         case m => sys.error(s"unsupported method $m")

@@ -22,15 +22,25 @@ import org.apache.spark.sql.types._
   *    one file, replaced by an atomic rename, so a lock-free reader sees
   *    the old map or the new one, never none (the reference keeps a
   *    branch head in a small label file the same way);
-  *  - materialization = ONE shuffle, not N anti-joins: union every
-  *    layer's adds(+seq) and removes(+seq), group by triple, and keep
-  *    triples whose latest add outranks their latest remove. This scales
-  *    with total delta size and parallelizes perfectly;
   *  - fold cache: commit ids are content-addressed, so a commit's folded
-  *    graph never changes. [[materialize]] keeps it as a checkpoint in
+  *    graph never changes. [[materialize]] keeps it in
   *    [[graft.util.FrameCache]] under `<root>@<commit id>`, admitted only
   *    when the chain's layer rows (read from parquet footers, before any
   *    job runs) fit the cache's row bound;
+  *  - materialization = a delta over the nearest ancestor whose fold is
+  *    cached (the chain root when none is), as the reference reads a
+  *    layer over its parent: only the later layers apply, in order,
+  *    `S := (S − removes) ∪ adds`. Within one layer the add outranks the
+  *    remove; equality is null-safe on every column;
+  *  - driver versus distributed fold, by the [[graft.util.LocalFinish]]
+  *    budget over the ancestor's rows plus the delta layers' footer row
+  *    counts (no job decides it): when they fit and the ancestor is
+  *    itself driver-local, the delta layers are read in ONE collect and
+  *    folded in memory into a driver-local frame, which holds no blocks
+  *    and writes nothing; above the budget, ONE shuffle — union the
+  *    ancestor's frame (lowest rank) with each delta layer's adds(+seq)
+  *    and removes(−seq), group by triple, keep triples whose latest add
+  *    outranks their latest remove — checkpointed;
   *  - `compact` = the on-disk rollup of one commit's fold (`flat/<id>`),
   *    `optimize` = rewrite the fold as a single base layer (delta
   *    rollup, like the reference's squash/rollup API).
@@ -209,18 +219,19 @@ final class LayerStore(val spark: SparkSession, val root: String) {
   def removes(commitId: String): DataFrame = readLayer(commitId, "removes")
 
   private def readLayer(id: String, side: String): DataFrame = {
-    val p = path("layers", id, side)
     // the schema is known: inferring it would run one job per layer
-    if (Files.exists(Paths.get(p, "_SUCCESS"))) spark.read.schema(Eav.schema).parquet(p)
+    if (hasLayer(id, side)) spark.read.schema(Eav.schema).parquet(path("layers", id, side))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Eav.schema)
   }
 
-  /** Rows in a layer's adds, from the parquet footers (no job). */
-  private def layerRows(id: String): Long = {
-    val dir = Paths.get(path("layers", id, "adds"))
-    if (!Files.exists(dir.resolve("_SUCCESS"))) 0L
-    else CatalogFiles.parts(dir).map(CatalogFiles.rowCount).sum
-  }
+  private def hasLayer(id: String, side: String): Boolean =
+    Files.exists(Paths.get(path("layers", id, side, "_SUCCESS")))
+
+  /** Rows in one side of a layer, from the parquet footers (no job). */
+  private def layerRows(id: String, side: String): Long =
+    if (!hasLayer(id, side)) 0L
+    else CatalogFiles.parts(Paths.get(path("layers", id, side)))
+      .map(CatalogFiles.rowCount).sum
 
   private def conform(df: DataFrame): DataFrame =
     df.select(Eav.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
@@ -269,27 +280,35 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     id
   }
 
-  /** Materialize the graph at a commit — one union + one shuffle.
-    * Within one commit removes apply BEFORE adds (adds outrank removes
-    * by one), so an update that deletes a subgraph and re-inserts an
-    * identical triple keeps it visible — the reference's commit
-    * semantics. */
+  /** Materialize the graph at a commit: the layers after its nearest
+    * cached ancestor, folded onto that ancestor's graph (see the class
+    * doc). Within one commit removes apply BEFORE adds, so an update
+    * that deletes a subgraph and re-inserts an identical triple keeps
+    * it visible — the reference's commit semantics. */
   def materialize(commitId: String): DataFrame = {
+    import graft.util.FrameCache
     val flat = path("flat", commitId, "adds")
     // flat-cache fast path: `compact` materialized this exact commit
     // into one base layer; commit ids are content-addressed so the
     // cache can never go stale — read 1 layer instead of O(history)
     if (Files.exists(Paths.get(flat, "_SUCCESS"))) spark.read.schema(Eav.schema).parquet(flat)
-    else graft.util.FrameCache.get(spark, graphKey(commitId)).getOrElse {
+    else FrameCache.get(spark, graphKey(commitId)).getOrElse {
       val rows = commitRows
       val ids = chainIn(rows, commitId)
       val known = rows.iterator.map(_.id).toSet
       // only a chain the catalog fully knows is immutable (an unknown
       // id may yet arrive by unpack); the fold has at most Σ adds rows
       if (!ids.forall(known) ||
-          ids.map(layerRows).sum > graft.util.FrameCache.maxRows) fold(ids)
-      else graft.util.FrameCache.put(spark, graphKey(commitId),
-        graft.util.FrameCache.checkpoint(fold(ids)))
+          ids.map(layerRows(_, "adds")).sum > FrameCache.maxRows) fold(None, ids)
+      else {
+        val ancestor = ids.indices.init.reverseIterator
+          .flatMap(i => FrameCache.get(spark, graphKey(ids(i))).map(i -> _)).nextOption()
+        val (base, delta) = ancestor match {
+          case Some((i, g)) => (Some(g), ids.drop(i + 1))
+          case None => (None, ids)
+        }
+        FrameCache.put(spark, graphKey(commitId), foldOnto(base, delta))
+      }
     }
   }
 
@@ -303,15 +322,73 @@ final class LayerStore(val spark: SparkSession, val root: String) {
     if (graft.util.FrameCache.get(spark, graphKey(commitId)).isEmpty) build
     else graft.util.FrameCache.getOrPut(spark, s"${graphKey(commitId)}|$name")(build)
 
-  private def fold(ids: Seq[String]): DataFrame = {
-    val parts = ids.zipWithIndex.flatMap { case (id, i) =>
-      Seq(adds(id).withColumn("__seq", lit(i.toLong * 2 + 2)),
-        removes(id).withColumn("__seq", lit(-(i.toLong * 2 + 1))))
+  /** The graph after layers `ids` apply, in order, to `base` (the graph
+    * just before `ids.head`; `None` when `ids` starts at the root). On
+    * the driver when `base` is driver-local and its rows plus the
+    * delta's footer row counts fit the [[graft.util.LocalFinish]]
+    * budget; otherwise the distributed [[fold]], checkpointed. */
+  private def foldOnto(base: Option[DataFrame], ids: Seq[String]): DataFrame = {
+    val baseRows = base match {
+      case None => Some(Array.empty[Row])
+      case Some(g) => localRows(g)
     }
+    val deltaRows = ids.map(id => layerRows(id, "adds") + layerRows(id, "removes")).sum
+    baseRows.filter(b => graft.util.LocalFinish.fits(Eav.schema, b.length + deltaRows)) match {
+      case Some(b) => spark.createDataFrame(
+        java.util.Arrays.asList(foldLocal(b, ids): _*), Eav.schema)
+      case None => graft.util.FrameCache.checkpoint(fold(base, ids))
+    }
+  }
+
+  /** The rows of a driver-local frame (collected with no job), or `None`
+    * for a frame whose rows live on executors. */
+  private def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(df.collect())
+      case _ => None
+    }
+
+  /** [[fold]] on the driver: the delta layers in ONE collect, applied
+    * in order to `base`, removes before adds within a layer. A Row set
+    * is null-safe and counts NaN = NaN and −0.0 = 0.0 like Spark's
+    * grouping, and doubles are normalized as grouping normalizes them,
+    * so the rows equal the shuffle fold's. */
+  private def foldLocal(base: Array[Row], ids: Seq[String]): Seq[Row] = {
+    val width = Eav.schema.length
+    val dbl = Eav.schema.fieldIndex("o_dbl")
+    // a row's Eav columns (a layer row also carries its rank), o_dbl normalized
+    def norm(r: Row): Row = Row.fromSeq((0 until width).map { c =>
+      if (c != dbl || r.isNullAt(c)) r.get(c)
+      else { val d = r.getDouble(c); if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d }
+    })
+    val graph = scala.collection.mutable.LinkedHashSet.empty[Row] ++= base.iterator.map(norm)
+    // rank 2i: layer i's removes, 2i + 1: its adds
+    val parts = ids.zipWithIndex.flatMap { case (id, i) =>
+      Seq("removes" -> 2L * i, "adds" -> (2L * i + 1)).collect {
+        case (side, rank) if hasLayer(id, side) =>
+          readLayer(id, side).withColumn("__rank", lit(rank))
+      }
+    }
+    if (parts.nonEmpty) parts.reduce(_ unionByName _).collect()
+      .groupBy(_.getLong(width)).toSeq.sortBy(_._1).foreach { case (rank, rs) =>
+        val layer = rs.iterator.map(norm)
+        if (rank % 2 == 0) graph --= layer else graph ++= layer
+      }
+    graph.toSeq
+  }
+
+  /** Distributed fold: ONE union + ONE shuffle over `base` and the
+    * layers `ids`. Latest action wins: seq is +rank for adds, −rank for
+    * removes, `base` ranks below every layer; a triple is visible iff
+    * max(add rank) > max(remove rank). */
+  private[graft] def fold(base: Option[DataFrame], ids: Seq[String]): DataFrame = {
+    val parts = base.map(_.withColumn("__seq", lit(1L))).toSeq ++
+      ids.zipWithIndex.flatMap { case (id, i) =>
+        Seq(adds(id).withColumn("__seq", lit(i.toLong * 2 + 3)),
+          removes(id).withColumn("__seq", lit(-(i.toLong * 2 + 2))))
+      }
     val all = parts.reduce(_ unionByName _)
     val keyCols = Eav.schema.fieldNames.toSeq
-    // latest action wins: seq is +rank for adds, -rank for removes;
-    // triple is visible iff max(add rank) > max(remove rank)
     all.groupBy(keyCols.map(col): _*)
       .agg(max(when(col("__seq") > 0, col("__seq")).otherwise(lit(null))).as("__a"),
         max(when(col("__seq") < 0, -col("__seq")).otherwise(lit(null))).as("__r"))
@@ -386,7 +463,7 @@ final class LayerStore(val spark: SparkSession, val root: String) {
       throw new IllegalArgumentException(s"no such branch $branchName"))
     val n = chain(head).size
     if (!Files.exists(Paths.get(path("flat", head, "adds", "_SUCCESS"))))
-      conform(fold(chain(head))).write.mode("overwrite")
+      conform(fold(None, chain(head))).write.mode("overwrite")
         .parquet(path("flat", head, "adds"))
     n
   }

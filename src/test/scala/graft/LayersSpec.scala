@@ -351,6 +351,92 @@ class LayersSpec extends AnyFunSuite {
     assert(b.materialize(c1).count() == 1)
   }
 
+  test("a head whose parent fold is cached folds only its own layer, in at most 1 job; again in 0") {
+    val st = freshStore()
+    val c1 = st.commit("main", triples((":a", "p", "v1"), (":b", "p", "v2")), empty, "c1")
+    val c2 = st.commit("main", triples((":c", "p", "v3"), (":a", "p", "v1")),
+      triples((":a", "p", "v1"), (":b", "p", "v2")), "c2")
+    assert(st.materialize(c1).count() == 2)
+    // c1's layer leaves the disk: a fold that read it would lose :a
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"${st.root}/layers/$c1"))
+    val (g, jobs) = jobsOf(st.materialize(c2))
+    assert(jobs <= 1)
+    assert(g.select("s").collect().map(_.getString(0)).toSet == Set(":a", ":c"))
+    assert(jobsOf(st.materialize(c2))._2 == 0)
+  }
+
+  test("folds from the root, from every cached ancestor and distributed equal the full-chain fold") {
+    import org.apache.spark.sql.Row
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import org.apache.commons.io.FileUtils
+    def row(s: String, p: String, kind: String, iri: String, typ: String, str: String,
+            dbl: java.lang.Double, lng: java.lang.Long, bool: java.lang.Boolean,
+            dec: java.math.BigDecimal, g: String = "instance"): Row =
+      Row(g, s, p, kind, iri, typ, str, dbl, lng, null, bool, null, dec)
+    // null typed slots on every row; −0.0 and 0.0 are one triple to
+    // Spark's grouping, NaN equals NaN
+    val pool = IndexedSeq(
+      row(":a", "p", "i", ":x", null, null, null, null, null, null),
+      row(":a", "p", "l", null, "xsd:string", "v", null, null, null, null),
+      row(":a", "p", "l", null, "xsd:string", null, null, null, null, null),
+      row(":b", "d", "l", null, "xsd:double", null, -0.0, null, null, null),
+      row(":b", "d", "l", null, "xsd:double", null, 0.0, null, null, null),
+      row(":b", "d", "l", null, "xsd:double", null, Double.NaN, null, null, null),
+      row(":c", "n", "l", null, "xsd:integer", null, null, 7L, null, null),
+      row(":c", "f", "l", null, "xsd:boolean", null, null, null, false, null),
+      row(":c", "m", "l", null, "xsd:decimal", null, null, null, null,
+        new java.math.BigDecimal("1.5").setScale(18)),
+      row(":s", "rdfs:subClassOf", "i", ":T", null, null, null, null, null, null, "schema"))
+    def frame(rs: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rs: _*), Eav.schema)
+    val subset = Gen.listOf(Gen.oneOf(pool)).map(_.take(5))
+    val chainGen = for {
+      n <- Gen.chooseNum(3, 4)
+      layers <- Gen.listOfN(n, Gen.zip(subset, subset))
+      both <- Gen.oneOf(pool); readd <- Gen.oneOf(pool); at <- Gen.chooseNum(0, n - 1)
+    } yield layers.zipWithIndex.map { case ((a, r), i) =>
+      // one layer adds and removes `both`; `readd` is added, removed and re-added
+      val a1 = a.filterNot(_ == readd) ++ (if (i == at) Seq(both) else Nil) ++
+        (if (i != 1) Seq(readd) else Nil)
+      val r1 = r.filterNot(_ == readd) ++ (if (i == at) Seq(both) else Nil) ++
+        (if (i == 1) Seq(readd) else Nil)
+      (a1, r1)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet[Row]
+    def isLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (1L to 6L).foreach { seed =>
+      val layers = chainGen.pureApply(Gen.Parameters.default, Seed(seed))
+      val st = freshStore()
+      val ids = layers.map { case (a, r) => st.commit("main", frame(a), frame(r), "m") }
+      val want = rows(st.fold(None, ids))
+      // a copy of the store with `ids(k)`'s fold cached, then every layer
+      // up to it deleted, so the head's fold can only start there
+      def headFrom(k: Option[Int]): org.apache.spark.sql.DataFrame = {
+        val copy = LayerStore.open(spark,
+          java.nio.file.Files.createTempDirectory("graft-layers").toString)
+        FileUtils.copyDirectory(new java.io.File(st.root), new java.io.File(copy.root))
+        k.foreach { i =>
+          copy.materialize(ids(i)).count()
+          ids.take(i + 1).foreach(id =>
+            FileUtils.deleteDirectory(new java.io.File(s"${copy.root}/layers/$id")))
+        }
+        copy.materialize(ids.last)
+      }
+      val starts = None +: ids.indices.init.map(Some(_))
+      starts.foreach { k =>
+        val g = headFrom(k)
+        assert(isLocal(g), s"seed $seed from $k")
+        assert(rows(g) == want, s"seed $seed, driver fold from $k")
+      }
+      starts.foreach { k =>
+        val g = graft.util.LocalFinish.forcingDistributed(headFrom(k))
+        assert(!isLocal(g), s"seed $seed from $k")
+        assert(rows(g) == want, s"seed $seed, distributed fold from $k")
+      }
+    }
+  }
+
   test("a commit runs exactly 4 Spark jobs: one hash aggregation, two layer writes") {
     val st = freshStore()
     st.commit("main", triples((":a", "p", "v1")), empty, "c1")

@@ -417,6 +417,35 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(miss == 400)
   }
 
+  test("a document GET on a cached head scans the base EAV exactly once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val (cp, bp) = post("/api/document?type=OneScan&key=name", """{"name":"s1","n":1}""")
+    assert(cp == 200, bp)
+    val path = "/api/document?id=doc:OneScan/s1"
+    assert(get(path)._1 == 200) // folds main's new head into the cache
+    // scans outside the layer store: the base EAV
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans.addAndGet(collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec if !s.relation.location.rootPaths
+            .exists(_.toString.contains(srv.store.root)) => s
+        }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val (code, body) = try {
+      val r = get(path)
+      org.apache.spark.ListenerBusFlush(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(l)
+    assert(code == 200, body)
+    assert((JsonMethods.parse(body) \ "@type") == JString("doc:OneScan"))
+    assert((JsonMethods.parse(body) \ "n") == JInt(1))
+    assert(scans.get == 1)
+  }
+
   test("woql queries a branch head and TIME-TRAVELS to a commit") {
     post("/api/branch?name=tt&from=main", "")
     val (_, b1) = post("/api/triples?branch=tt",

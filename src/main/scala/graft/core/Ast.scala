@@ -37,7 +37,12 @@ final case class PSeq(a: PathPat, b: PathPat) extends PathPat
 final case class PAlt(a: PathPat, b: PathPat) extends PathPat
 final case class PPlus(p: PathPat) extends PathPat
 final case class PStar(p: PathPat) extends PathPat
-final case class PTimes(p: PathPat, n: Int, m: Int) extends PathPat
+/** `p` repeated n..m times. Every parser and caller builds one here,
+  * so the bounds are checked once, at construction. */
+final case class PTimes(p: PathPat, n: Int, m: Int) extends PathPat {
+  require(n >= 0 && m >= 1 && n <= m,
+    s"times($n,$m) out of range: need 0 <= n <= m and m >= 1")
+}
 
 sealed trait Woql
 

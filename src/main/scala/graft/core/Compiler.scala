@@ -1005,7 +1005,7 @@ object Compiler {
             .select(col(a).getField("iri").as("orig"))
             .where(col("orig").isNotNull).distinct()
             .select(col("orig"), col("orig").as("n"))
-          val walked = Paths.stepPairs(pat, seeds, ctx)
+          val walked = Paths.step(pat, seeds, ctx)
           BF(walked.select(iriVal(col("orig")).as(a), iriVal(col("n")).as(b)),
             Set(a, b), iriVars = Set(a, b))
         case (V(a), V(b), _) if cur.vars(b) =>
@@ -1015,7 +1015,7 @@ object Compiler {
             .select(col(b).getField("iri").as("orig"))
             .where(col("orig").isNotNull).distinct()
             .select(col("orig"), col("orig").as("n"))
-          val walked = Paths.stepPairs(Paths.invert(pat), seeds, ctx)
+          val walked = Paths.step(Paths.invert(pat), seeds, ctx)
           BF(walked.select(iriVal(col("orig")).as(b), iriVal(col("n")).as(a)),
             Set(a, b), iriVars = Set(a, b))
         case (V(a), V(b), _) =>

@@ -442,20 +442,15 @@ object Dedup {
     val edges = cp(pairs
       .unionByName(pairs.select(col("db").as("da"), col("da").as("db"))))
     var labels = cp(ids.withColumn("cluster", col("doc_id")))
-    // Broadcast hint for the V-sized label/neighbor-min frames: below
-    // the cap (same knob family as the path engine's broadcast rows)
+    // The V-sized label/neighbor-min frames broadcast when they fit:
     // each round's edges ⋈ labels probes the checkpointed edge blocks
     // map-side and the label left-join builds the (≤ V-row) nmin table
     // map-side — per round ONE exchange (the da aggregate) instead of
     // four. The label count is exact (checkpointed seed, counted once;
-    // labels stay V-sized every round); above the cap both joins fall
-    // back to shuffles, so billion-node graphs keep the shuffle shape.
-    val bcap = sys.props.get("graft.cc.broadcastRows")
-      .orElse(sys.env.get("GRAFT_CC_BROADCAST_ROWS"))
-      .map(_.toLong).getOrElse(2000000L)
+    // labels stay V-sized every round).
     val vCount = labels.count()
     def hinted(df: DataFrame): DataFrame =
-      if (vCount < bcap) broadcast(df) else df
+      graft.util.LocalFinish.broadcastIfFits(df, vCount)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxRounds) {

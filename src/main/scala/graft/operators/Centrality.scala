@@ -100,65 +100,19 @@ object Centrality {
         .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Frontier/seen-set broadcast cap for the per-hop joins — the same
-    * knob family as the path engine's GRAFT_PATH_BROADCAST_ROWS: below
-    * the cap the (checkpointed, exactly-counted) frontier is broadcast
-    * so the persisted edge relation is probed IN PLACE instead of
-    * re-exchanged every hop; above it the join falls back to a shuffle.
-    * At 100 TB a k·V-sized seen-set eventually crosses the cap and the
-    * shuffle path takes over — the hint never changes results. */
-  private def broadcastRows: Long =
-    sys.props.get("graft.centrality.broadcastRows")
-      .orElse(sys.env.get("GRAFT_CENTRALITY_BROADCAST_ROWS"))
-      .map(_.toLong).getOrElse(2000000L)
-
   /** Multi-source BFS from `seeds` (one `node` column): (l, node,
-    * dist) rows for every node within maxHops of a seed l. */
-  private def bfs(und: DataFrame, seeds: DataFrame,
-                  maxHops: Int): DataFrame = {
-    // SEMI-NAIVE BFS (the Paths.scala closure discipline): each hop
-    // joins ONLY the hop-h frontier against edges — never the full
-    // accumulated distance table, which the naive form re-joined every
-    // round at O(k·V ⋈ E) per hop instead of O(frontier ⋈ E). BFS
-    // level order guarantees first discovery IS the min distance, so
-    // the per-round min-aggregate disappears too; the anti-join
-    // against the seen-set replaces it. Frontiers are eagerly
-    // checkpointed per hop (the 10.7 s → ~1 s sf0.1 lineage lesson,
-    // BASELINE.md r13) and the loop exits as soon as a frontier is
-    // empty — diameter < maxHops graphs stop paying for empty rounds.
-    // Frontier and seen-set are broadcast-hinted below [[broadcastRows]]
-    // (counts are exact — each frontier is checkpointed then counted):
-    // the hop join probes the persisted edge relation map-side and the
-    // anti-join runs map-side over the distinct output, so a hop pays
-    // ONE small exchange (the distinct) instead of re-exchanging the
-    // full edge relation + frontier + seen-set every round.
-    val bcap = broadcastRows
-    def hinted(df: DataFrame, rows: Long): DataFrame =
-      if (rows >= 0 && rows < bcap) broadcast(df) else df
-    val seed = graft.util.Scratch.trackCheckpoint(seeds
-      .select(col("node").as("l"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true))
-    val frontiers = scala.collection.mutable.ArrayBuffer[DataFrame](seed)
-    var frontier = seed
-    var frontierCount = seed.count()
-    var seen = seed.select(col("l"), col("node"))
-    var seenCount = frontierCount
-    var h = 0L
-    while (h < maxHops && frontierCount > 0) {
-      h += 1
-      val next = hinted(frontier, frontierCount)
-        .join(und, col("node") === col("src"))
+    * dist) rows for every node within maxHops of a seed l — the
+    * semi-naive [[graft.util.Fixpoint.walk]] keyed on (l, node). Each
+    * hop joins ONLY the newly discovered frontier against the edges,
+    * never the full distance table (the naive form re-joined O(k·V ⋈ E)
+    * per hop); BFS level order makes first discovery the min distance,
+    * so the anti-join against the seen set replaces a min-aggregate.
+    * The walk exits on an empty frontier, so a graph of diameter below
+    * maxHops stops paying for empty rounds. */
+  private def bfs(und: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    graft.util.Fixpoint.walk(seeds.select(col("node").as("l"), col("node")),
+        Seq("l", "node"), seedsSeen = true, dist = true, maxRounds = maxHops) {
+      _.join(und, col("node") === col("src"))
         .select(col("l"), col("dst").as("node")).distinct()
-        .join(hinted(seen, seenCount), Seq("l", "node"), "left_anti")
-        .select(col("l"), col("node"), lit(h).as("dist"))
-      frontier = graft.util.Scratch.trackCheckpoint(next.localCheckpoint(true))
-      frontierCount = frontier.count()
-      if (frontierCount > 0) {
-        frontiers += frontier
-        seen = seen.unionByName(frontier.select(col("l"), col("node")))
-        seenCount += frontierCount
-      }
     }
-    frontiers.reduce(_ unionByName _)
-  }
 }

@@ -35,23 +35,18 @@ object KCore {
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     var prev: DataFrame = null
     var n = e.count()
-    // Broadcast hint for the surviving-node set: alive is ≤ 2·|e| rows
-    // (exact edge counts come free from each round's convergence
-    // check), so below the cap both semi-joins probe the checkpointed
-    // edge blocks map-side — per round ONE exchange (the degree
-    // aggregate) instead of three. Above the cap (cluster-scale node
-    // sets) the semi-joins keep their shuffle shape.
-    val bcap = sys.props.get("graft.kcore.broadcastRows")
-      .orElse(sys.env.get("GRAFT_KCORE_BROADCAST_ROWS"))
-      .map(_.toLong).getOrElse(2000000L)
     var changed = true
     var r = 0
     while (changed && r < maxRounds) {
       r += 1
       val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val alive0 = deg.where(col("deg") >= k).select(col("v"))
-      val alive = if (2 * n < bcap) broadcast(alive0) else alive0
+      // alive is ≤ 2·|e| rows (the exact edge count comes free from
+      // each round's convergence check); when that fits, both semi-joins
+      // probe the checkpointed edge blocks map-side, so a round pays one
+      // exchange (the degree aggregate) instead of three
+      val alive = graft.util.LocalFinish.broadcastIfFits(
+        deg.where(col("deg") >= k).select(col("v")), 2 * n)
       val e2 = e
         .join(alive.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("v").as("b")), Seq("b"), "left_semi")

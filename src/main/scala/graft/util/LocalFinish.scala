@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,7 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the driver's max heap. `defaultSize` counts one element per array
   * and no JVM object headers, so the share is kept small to leave room
   * for the collected objects' real footprint. Not an option: the size
-  * is derived from the heap the driver was started with.
+  * is derived from the heap the driver was started with. The same
+  * budget decides broadcast joins ([[broadcastIfFits]]): a broadcast
+  * side is collected on the driver too.
   */
 object LocalFinish {
   /** Share of the driver's max heap that collected loop state may take. */
@@ -41,6 +44,12 @@ object LocalFinish {
     * fit the budget. */
   def fits(schema: StructType, rows: Long): Boolean =
     !distributedOnly.value && rows <= budgetBytes / rowBytes(schema)
+
+  /** `df` hinted for a broadcast join when its `rows`, an exact count,
+    * fit the budget; above it the join keeps its shuffle. The hint
+    * never changes a result, only where the join runs. */
+  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
+    if (fits(df.schema, rows)) broadcast(df) else df
 
   /** The rows of every frame, in order, when together they fit the
     * budget; `None` when they do not. Each frame is read by ONE

@@ -115,6 +115,15 @@ class PathsSpec extends AnyFunSuite {
     assert(cyc == Set((":b", 1L), (":c", 2L), (":a", 3L), (":d", 3L)))
   }
 
+  test("witness plus binds a source that a longer cycle re-reaches") {
+    // a→b→c→a: plus from :a reaches :a again after 3 steps, as the walk
+    // without a witness does (`plus terminates on cycles`)
+    val res = witnesses(PathQ(Node(":a"), PPlus(PPred("e")), V("Y"),
+      witness = Some("W")))
+    assert(res.toSet == Set((":b", ":a/:b"), (":c", ":a/:b/:c"),
+      (":a", ":a/:b/:c/:a"), (":d", ":a/:b/:c/:d")))
+  }
+
   test("all-sources shortest refuses beyond the edge budget") {
     System.setProperty("graft.closure.maxEdges", "2")
     try {

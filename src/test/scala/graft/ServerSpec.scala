@@ -149,6 +149,17 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((JsonMethods.parse(body) \ "api:status") == JString("api:failure"))
   }
 
+  test("an out-of-range times(n, m) is a 400 naming the bounds") {
+    val wire =
+      """{"@type":"Path","subject":{"node":"tpch:region/0"},
+        |"pattern":{"@type":"PathTimes","from":3,"to":2,
+        |"times":{"@type":"InversePathPredicate","predicate":"tpch:n_regionkey"}},
+        |"object":{"variable":"Y"}}""".stripMargin
+    val (code, body) = post("/api/woql", wire)
+    assert(code == 400, body)
+    assert(body.contains("times(3,2) out of range"), body)
+  }
+
   test("fetch records a remote-tracking ref without moving the local head") {
     val remoteDir = java.nio.file.Files
       .createTempDirectory("graft_http_remote").toString

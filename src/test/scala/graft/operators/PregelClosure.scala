@@ -4,9 +4,10 @@ import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX/Pregel transitive closure — the measured A/B counterpart to
+/** GraphX/Pregel transitive closure — an independent reference for
   * [[graft.core.Paths.transitiveClosure]]'s semi-naive DataFrame loop
-  * (SURVEY §2.7; reference path closure: core/query/path.pl).
+  * (SURVEY §2.7; reference path closure: core/query/path.pl), and the
+  * measured A/B counterpart the engine's choice was made against.
   *
   * Formulation: vertex state = the set of ancestor ids known to reach
   * the vertex; every superstep forwards newly-learned ancestors along
